@@ -45,6 +45,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SCHEMES = ("fast", "portable")
+# minhash_sig_array's sentinel is num_hashes << 56, which fits in int64
+# only up to this many seeds
+_MAX_NUM_HASHES = 127
 
 
 def _check_scheme(scheme: str) -> None:
@@ -160,9 +163,14 @@ def minhash_sig_array(hp: Column, num_hashes: int) -> Column:
     NULLs, so a slot still at the init sentinel had no non-null
     contribution — a true min is strictly below it). The init
     ``num_hashes << 56`` exceeds any h1 + k*h2 < num_hashes * 2^56
-    (56-bit halves, k < num_hashes) and overflows int64 loudly past
-    num_hashes = 127 — the same bound the per-seed form had under ANSI.
+    (56-bit halves, k < num_hashes) and would overflow int64 past
+    num_hashes = 127, so larger values are refused up front.
     """
+    if num_hashes > _MAX_NUM_HASHES:
+        raise ValueError(
+            f"num_hashes={num_hashes} exceeds {_MAX_NUM_HASHES}: the "
+            "signature sentinel num_hashes << 56 must fit in int64"
+        )
     init_val = num_hashes << 56
     seeds = F.array(*[F.lit(k).cast("long") for k in range(num_hashes)])
     nulls = F.array(

@@ -13,7 +13,10 @@ Scale notes:
 * Log replay is driver-side but O(|log since checkpoint|) — the same
   contract delta-spark itself has; `_last_checkpoint` is honored so a
   long-lived table replays O(checkpoint interval) JSON commits, and
-  the checkpoint parquet is read through Spark, not the driver.
+  the checkpoint parquet is read with pyarrow, without a Spark job.
+* A process-wide snapshot cache (``_replay``) keeps the newest state
+  read per table root and advances it by the new JSON commits only, so
+  a warm read or write costs a listing and a few ``stat`` calls.
 * Partitioned tables use Delta's hive-style data paths, so the scan
   recovers partition columns via ``basePath`` — one multi-file scan,
   no per-partition unions, and partition pruning still works.
@@ -26,9 +29,11 @@ Scale notes:
 from __future__ import annotations
 
 import json
+import threading
 import uuid
+from collections import OrderedDict
 from pathlib import Path
-from typing import Any
+from typing import Any, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -526,6 +531,16 @@ class _State:
         # appId -> highest committed txn version (idempotent writers)
         self.txns: dict[str, int] = {}
 
+    def copy(self) -> "_State":
+        """A state that can take more actions without changing this one.
+        ``apply`` mutates only ``adds`` and ``txns`` in place; every
+        other field it replaces wholesale, so those are shared."""
+        out = _State()
+        out.__dict__.update(self.__dict__)
+        out.adds = dict(self.adds)
+        out.txns = dict(self.txns)
+        return out
+
     def apply(self, action: dict[str, Any]) -> None:
         if "add" in action and action["add"] is not None:
             add = action["add"]
@@ -597,48 +612,124 @@ class _State:
         return {c: fields.get(c, c) for c in self.partition_columns}
 
 
-def _replay_checkpoint(spark: SparkSession, root: str, version: int, state: _State) -> None:
-    """Fold a classic checkpoint parquet (one row per action) into state.
+# Checkpoint columns the replay reads, each with the field that marks a
+# row as carrying that action. `remove` rows are tombstones for VACUUM,
+# not part of the active set, so they are never read.
+_CHECKPOINT_ACTIONS = {
+    "metaData": "schemaString",
+    "protocol": "minReaderVersion",
+    "add": "path",
+    "txn": "appId",
+    "sidecar": "path",
+}
 
-    The checkpoint is read through Spark — it can be arbitrarily large
-    on a big table; only the surviving add-file rows are collected."""
+
+def _arrow_to_py(value: Any, typ: Any) -> Any:
+    """A pyarrow ``to_pylist`` value with every map turned into a dict,
+    recursively — the shape ``Row.asDict(recursive=True)`` gives."""
+    import pyarrow as pa
+
+    if value is None:
+        return None
+    if pa.types.is_map(typ):
+        return {k: _arrow_to_py(v, typ.item_type) for k, v in value}
+    if pa.types.is_struct(typ):
+        return {
+            f.name: _arrow_to_py(value[f.name], f.type)
+            for f in (typ.field(i) for i in range(typ.num_fields))
+        }
+    if pa.types.is_list(typ) or pa.types.is_large_list(typ):
+        return [_arrow_to_py(v, typ.value_type) for v in value]
+    return value
+
+
+def _fold_checkpoint_file(log: Path, path: Path, state: _State) -> None:
+    """Apply the actions of one checkpoint parquet file, read
+    driver-side and projected to the action columns it has. V2
+    checkpoints move most file actions into sidecar files under
+    ``_delta_log/_sidecars/``, named by `sidecar` rows: those are folded
+    too, or the table would silently lose files."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    cols = [c for c in _CHECKPOINT_ACTIONS if c in pf.schema_arrow.names]
+    table = pf.read(columns=cols)
+    for name in cols:
+        col = table.column(name)
+        marker = _CHECKPOINT_ACTIONS[name]
+        for v in col.to_pylist():
+            if v is None or v.get(marker) is None:
+                continue
+            action = _arrow_to_py(v, col.type)
+            if name == "sidecar":
+                _fold_checkpoint_file(log, log / "_sidecars" / action["path"], state)
+            else:
+                state.apply({name: action})
+
+
+def _replay_checkpoint(root: str, version: int, state: _State) -> None:
+    """Fold a checkpoint (classic, multi-part or V2 with sidecars) into
+    state. The parquet is read with pyarrow: every add row ends up in
+    driver memory either way, so a Spark read would only add jobs."""
     log = Path(root) / DELTA_LOG_DIR
-    parts = sorted(str(p) for p in log.glob(f"{version:020d}.checkpoint*.parquet"))
+    parts = sorted(log.glob(f"{version:020d}.checkpoint*.parquet"))
     if not parts:
         raise FileNotFoundError(f"_last_checkpoint names v{version} but no parquet found")
-    cp = spark.read.parquet(*parts)
-    cols = set(cp.columns)
-    if "metaData" in cols:
-        for r in cp.filter(F.col("metaData.schemaString").isNotNull()).select("metaData").collect():
-            state.apply({"metaData": r["metaData"].asDict(recursive=True)})
-    if "protocol" in cols:
-        for r in cp.filter(F.col("protocol.minReaderVersion").isNotNull()).select("protocol").collect():
-            state.apply({"protocol": r["protocol"].asDict(recursive=True)})
-    if "add" in cols:
-        for r in cp.filter(F.col("add.path").isNotNull()).select("add").collect():
-            state.apply({"add": r["add"].asDict(recursive=True)})
-    if "txn" in cols:
-        for r in cp.filter(F.col("txn.appId").isNotNull()).select("txn").collect():
-            state.apply({"txn": r["txn"].asDict(recursive=True)})
-    if "sidecar" in cols:
-        # V2 checkpoints move most file actions into sidecar parquet
-        # files under _delta_log/_sidecars/, referenced by `sidecar`
-        # action rows in the top-level checkpoint. Folding only the
-        # top-level adds would yield a silently incomplete file set.
-        sidecar_paths = [
-            str(log / "_sidecars" / r["sidecar"]["path"])
-            for r in cp.filter(F.col("sidecar.path").isNotNull()).select("sidecar").collect()
-        ]
-        if sidecar_paths:
-            sc = spark.read.parquet(*sidecar_paths)
-            if "add" in sc.columns:
-                for r in sc.filter(F.col("add.path").isNotNull()).select("add").collect():
-                    state.apply({"add": r["add"].asDict(recursive=True)})
-    # A checkpoint's `remove` rows are tombstones for VACUUM, not part
-    # of the active set — files already absent from `add` stay absent.
+    for p in parts:
+        _fold_checkpoint_file(log, p, state)
 
 
-def _replay(spark: SparkSession, root: str, version: int | None) -> _State:
+# ---------------------------------------------------------------------------
+# Snapshot cache (the design of Delta's Snapshot / DeltaLog.update())
+#
+# One entry per resolved table root holds the _State at the newest
+# version read, plus the identity of the log segment it was built from:
+# (name, size, mtime_ns, inode) of each checkpoint part and of each JSON
+# commit after it. A read whose segment extends the cached one copies
+# the cached state and applies only the new commits; any other segment
+# (a recreated directory, a rewritten or new checkpoint, a changed
+# file) replays from the checkpoint. Time travel below the cached
+# version replays without touching the entry.
+# ---------------------------------------------------------------------------
+
+# Table roots kept; the least recently used is dropped beyond this.
+_SNAPSHOT_CACHE_ROOTS = 16
+
+
+class _Snapshot(NamedTuple):
+    version: int
+    segment: tuple[tuple[str, int, int, int], ...]
+    state: _State
+
+
+_snapshots: OrderedDict[str, _Snapshot] = OrderedDict()
+_snapshots_lock = threading.Lock()
+
+
+def _file_identity(p: Path) -> tuple[str, int, int, int]:
+    st = p.stat()
+    return (p.name, st.st_size, st.st_mtime_ns, st.st_ino)
+
+
+def _apply_commits(root: str, state: _State, first: int, last: int) -> None:
+    log = Path(root) / DELTA_LOG_DIR
+    for v in range(first, last + 1):
+        with open(log / f"{v:020d}.json") as fh:
+            for line in fh:
+                line = line.strip()
+                if line:
+                    state.apply(json.loads(line))
+
+
+def _replay(root: str, version: int | None) -> _State:
+    """Table state at ``version`` (latest when None).
+
+    Served from the process-wide snapshot cache: the cache key is the
+    resolved root, the invalidation key the log segment's file
+    identities (see above), so the checkpoint is read once per new
+    checkpoint and each JSON commit once per new version. The returned
+    state is shared with the cache and with other callers — treat it as
+    read-only."""
     versions = _commit_versions(root)
     if not versions:
         raise ValueError(f"not a Delta table (no _delta_log commits): {root}")
@@ -648,32 +739,55 @@ def _replay(spark: SparkSession, root: str, version: int | None) -> _State:
     if version not in versions and version > latest:
         raise ValueError(f"version {version} not in log (latest {latest})")
 
-    state = _State()
-    start = 0
+    log = Path(root) / DELTA_LOG_DIR
     cp = _last_checkpoint(root)
-    if cp is not None and cp["version"] <= version:
-        _replay_checkpoint(spark, root, cp["version"], state)
-        start = cp["version"] + 1
-    else:
+    cp_version = cp["version"] if cp is not None and cp["version"] <= version else None
+    if cp_version is None:
         # Time travel to a pre-checkpoint version replays from zero —
         # valid only while those JSON commits still exist.
-        missing = [v for v in range(start, version + 1) if v not in versions]
+        missing = [v for v in range(0, version + 1) if v not in versions]
         if missing:
             raise ValueError(
                 f"cannot reconstruct v{version}: commits {missing} absent "
                 "(vacuumed past the requested version)"
             )
-    log = Path(root) / DELTA_LOG_DIR
-    for v in range(start, version + 1):
-        p = log / f"{v:020d}.json"
-        with open(p) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    state.apply(json.loads(line))
+        parts: list[Path] = []
+        start = 0
+    else:
+        parts = sorted(log.glob(f"{cp_version:020d}.checkpoint*.parquet"))
+        start = cp_version + 1
+    segment = tuple(_file_identity(p) for p in parts) + tuple(
+        _file_identity(log / f"{v:020d}.json") for v in range(start, version + 1)
+    )
+
+    key = str(Path(root).resolve())
+    with _snapshots_lock:
+        cached = _snapshots.get(key)
+        if cached is not None:
+            _snapshots.move_to_end(key)
+    if cached is not None and segment[: len(cached.segment)] == cached.segment:
+        if cached.version == version:
+            return cached.state
+        state = cached.state.copy()
+        _apply_commits(root, state, cached.version + 1, version)
+    else:
+        state = _State()
+        if cp_version is not None:
+            _replay_checkpoint(root, cp_version, state)
+        _apply_commits(root, state, start, version)
     state.check_readable()
     if state.schema_json is None:
         raise ValueError(f"no metaData action found in {root}")
+    with _snapshots_lock:
+        cur = _snapshots.get(key)
+        # a read below the cached version must not evict it, unless it is
+        # the latest version (then the cached entry is from a log that no
+        # longer exists)
+        if cur is None or version >= cur.version or version == latest:
+            _snapshots[key] = _Snapshot(version, segment, state)
+            _snapshots.move_to_end(key)
+            while len(_snapshots) > _SNAPSHOT_CACHE_ROOTS:
+                _snapshots.popitem(last=False)
     return state
 
 
@@ -699,15 +813,15 @@ class DeltaInteropTable:
 
     @property
     def schema(self) -> StructType:
-        state = _replay(self.spark, self.root, None)
+        state = _replay(self.root, None)
         assert state.schema_json is not None
         return StructType.fromJson(json.loads(state.schema_json))
 
     def properties(self) -> dict[str, Any]:
-        return _replay(self.spark, self.root, None).properties
+        return dict(_replay(self.root, None).properties)
 
     def to_df(self, version: int | None = None) -> DataFrame:
-        state = _replay(self.spark, self.root, version)
+        state = _replay(self.root, version)
         assert state.schema_json is not None
         schema = StructType.fromJson(json.loads(state.schema_json))
         if not state.adds:
@@ -890,7 +1004,7 @@ class DeltaInteropTable:
             )
         # one replay at `end` supplies schema/partition/mapping context
         # for every scan and re-validates readability
-        state = _replay(self.spark, self.root, end)
+        state = _replay(self.root, end)
         assert state.schema_json is not None
         schema = StructType.fromJson(json.loads(state.schema_json))
         # cdc files carry the data columns (physical names under

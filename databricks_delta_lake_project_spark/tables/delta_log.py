@@ -26,9 +26,15 @@ tooling while this engine appends/MERGEs/deletes through its own
 DataFrame machinery.
 
 Snapshot state (active files, schema, properties) is resolved through
-``delta_interop._replay`` — the independent read path — so every write
-is round-tripped through the public protocol, never through private
-state. Write-back covers every readable SHAPE — partitioned tables
+``delta_interop._replay``, the read path external tables use, so every
+write is round-tripped through the public protocol, never through
+private state. That replay is served from a process-wide snapshot
+cache keyed by the table root: a call re-lists ``_delta_log`` and
+``stat``s the log segment (checkpoint parts plus the JSON commits after
+them); when the cached segment is a prefix of the current one, only the
+new commits are applied, and any other change — a recreated directory,
+a new or rewritten checkpoint, a changed commit file — replays from the
+checkpoint. Write-back covers every readable SHAPE — partitioned tables
 (hive-style layout, ``partitionValues``-stamped adds), column-mapped
 tables (physical-named parquet + preserved mapping metadata), live
 deletion vectors — and honors writer OBLIGATIONS: CHECK constraints /
@@ -264,10 +270,10 @@ class DeltaLogBackend:
         versions = self.list_versions(root)
         return versions[-1] if versions else None
 
-    # -- snapshot state (via the independent replay path) ------------------
+    # -- snapshot state (via the cached replay path) ------------------------
 
     def _state(self, root: str, version: int | None = None) -> di._State:
-        return di._replay(self.spark, root, version)
+        return di._replay(root, version)
 
     def partition_columns(
         self, root: str, version: int | None = None
@@ -491,7 +497,7 @@ class DeltaLogBackend:
     def table_properties(
         self, root: str, version: int | None = None
     ) -> dict[str, Any]:
-        return self._state(root, version).properties
+        return dict(self._state(root, version).properties)
 
     def referenced_files_all_versions(self, root: str) -> set[str]:
         refs: set[str] = set()

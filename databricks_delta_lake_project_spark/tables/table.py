@@ -3082,7 +3082,7 @@ class LakeTable:
 
                     from .delta_interop import DeltaInteropTable, _replay
 
-                    state = _replay(self.spark, self.root, v)
+                    state = _replay(self.root, v)
                     schema_v = StructType.fromJson(
                         json.loads(state.schema_json)
                     )

@@ -17,6 +17,7 @@ from databricks_delta_lake_project_spark.operators.dedup import (
     incremental_near_dup_pairs,
     minhash_index,
     minhash_lsh_pairs,
+    minhash_sig_array,
     ngram_jaccard,
 )
 
@@ -96,3 +97,12 @@ def test_fast_minhash_never_overflows(spark):
     )
     out = minhash_lsh_pairs(df, "doc_id", "text", scheme="fast")
     out.collect()  # would raise ArithmeticException on overflow
+
+
+def test_minhash_sig_array_refuses_more_than_127_hashes(spark):
+    """The sentinel num_hashes << 56 overflows int64 past 127 seeds:
+    refused with a ValueError naming the bound, before any Spark work."""
+    hp = F.array(F.struct(F.lit(1).alias("h1"), F.lit(2).alias("h2")))
+    minhash_sig_array(hp, 127)  # the bound itself is legal
+    with pytest.raises(ValueError, match="127"):
+        minhash_sig_array(hp, 128)

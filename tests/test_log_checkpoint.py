@@ -146,7 +146,7 @@ def test_delta_checkpoint_preserves_dvs_and_partitioning(spark, tmp_path):
     cp = _last_checkpoint(root)
     assert cp is not None and cp["version"] >= 10
     # checkpoint-seeded replay must still know the DV and partitioning
-    state = _replay(spark, root, None)
+    state = _replay(root, None)
     assert state.partition_columns == ["day"]
     dv_adds = [a for a in state.adds.values() if a.get("deletionVector")]
     assert dv_adds, "checkpoint dropped the deletionVector descriptor"
@@ -221,7 +221,7 @@ def test_delta_checkpoint_carries_protocol_features_txn_and_id(spark, tmp_path):
         p = log / f"{v:020d}.json"
         if p.exists():
             p.unlink()
-    state = _replay(spark, root, None)
+    state = _replay(root, None)
     assert state.txns == {"appA": 7}
     assert state.protocol["minReaderVersion"] == 3
     assert t.txn_version("appA") == 7
