@@ -50,16 +50,10 @@ def q50_partitioned_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if bench_fast():
         orders = orders.where("pmod(o_orderkey, 4) = 0")
-    # co-locate rows with their target partition BEFORE the partitioned
-    # write: without this every upstream task writes a sliver into every
-    # status dir (tasks × partitions tiny files — the classic
-    # partitionBy mistake); with it each partition lands as a few
-    # well-sized files. Same move a 100 TB ingest makes, just with a
-    # higher task count.
     t = LakeTable.create(
         spark,
         str(table_path),
-        df=orders.repartition(3, "status"),
+        df=orders,
         format="delta",
         partition_by=["status"],
     )

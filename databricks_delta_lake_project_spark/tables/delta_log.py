@@ -15,8 +15,9 @@ following the public Delta protocol:
 * a classic parquet checkpoint + ``_last_checkpoint`` every
   ``CHECKPOINT_INTERVAL`` commits (written with pyarrow using the
   protocol's map-typed ``partitionValues``/``configuration`` fields);
-* the same put-if-absent optimistic concurrency (``open(path, "x")``)
-  Delta itself relies on for object-store commits.
+* the same put-if-absent optimistic concurrency Delta itself relies
+  on for object-store commits, published whole (``log.publish_new``:
+  temp file, then a hard link to ``<version>.json``).
 
 The reference stack keeps every Silver/Gold table in Delta format and
 MERGEs into them in place (``/root/reference/src/silver/
@@ -63,6 +64,7 @@ from .delta_interop import (
     merge_schema_metadata as _merge_field_metadata,
     strip_schema_metadata as _strip_schema_metadata,
 )
+from .log import publish_new
 
 DATA_DIR = "data"
 CHANGES_DIR = "_changes"
@@ -942,10 +944,7 @@ class DeltaLogBackend:
             path = Path(root) / LOG_DIR / f"{version:020d}.json"
             path.parent.mkdir(parents=True, exist_ok=True)
             body = "\n".join(json.dumps(l) for l in lines) + "\n"
-            try:
-                with open(path, "x") as fh:
-                    fh.write(body)
-            except FileExistsError:
+            if not publish_new(path, body):
                 continue  # lost the race: recompute version and retry
             if version > 0 and version % CHECKPOINT_INTERVAL == 0:
                 self._write_checkpoint(root, version)

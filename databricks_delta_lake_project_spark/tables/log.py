@@ -11,11 +11,12 @@ Layout under a table root:
     <root>/data/part-*.parquet              immutable data files
     <root>/_changes/version=N/*.parquet     change-data-feed rows
 
-Commit protocol: the commit file for version N is created with
-``open(path, "x")`` (put-if-absent). Two concurrent writers racing on
-the same version -> exactly one wins; the loser re-reads the log and
-retries. This is the same optimistic-concurrency contract Delta uses
-on object stores.
+Commit protocol: the commit file for version N is published
+put-if-absent (``publish_new``: a hard link from a fully written temp
+file, so a crash never leaves a torn version). Two concurrent writers
+racing on the same version -> exactly one wins; the loser re-reads the
+log and retries. This is the same optimistic-concurrency contract Delta
+uses on object stores.
 
 Each commit document:
 
@@ -32,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from pathlib import Path
 from typing import Any
 
@@ -44,6 +46,26 @@ CHANGES_DIR = "_changes"
 # commits instead of O(version). Commit JSONs are never deleted, so
 # time travel to pre-checkpoint versions still replays from zero.
 CHECKPOINT_INTERVAL = 20
+
+
+def publish_new(path: Path, body: str) -> bool:
+    """Create ``path`` holding ``body`` if it does not exist yet; False
+    when it does (a lost race). The body goes to a dot-prefixed temp
+    file in the same directory first and is hard-linked into place, so
+    ``path`` appears whole or not at all: a crash or ENOSPC mid-write
+    leaves at most the temp file, which no log listing reads (their
+    names are not ``<digits>.json``)."""
+    tmp = path.with_name(f".{path.name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "x") as fh:
+            fh.write(body)
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            return False
+        return True
+    finally:
+        tmp.unlink(missing_ok=True)
 
 
 def _commit_path(root: str, version: int) -> Path:
@@ -108,11 +130,7 @@ def write_checkpoint(root: str, version: int) -> None:
         "properties": props,
         "txns": txns,
     }
-    try:
-        with open(_checkpoint_path(root, version), "x") as f:
-            f.write(json.dumps(doc))
-    except FileExistsError:
-        pass
+    publish_new(_checkpoint_path(root, version), json.dumps(doc))
 
 
 def list_versions(root: str) -> list[int]:
@@ -159,13 +177,7 @@ def try_commit(root: str, commit: dict[str, Any]) -> bool:
     (optimistic-concurrency conflict — caller re-reads and retries)."""
     path = _commit_path(root, commit["version"])
     path.parent.mkdir(parents=True, exist_ok=True)
-    tmp = json.dumps(commit)
-    try:
-        with open(path, "x") as f:
-            f.write(tmp)
-        return True
-    except FileExistsError:
-        return False
+    return publish_new(path, json.dumps(commit))
 
 
 class ConcurrentModificationError(RuntimeError):

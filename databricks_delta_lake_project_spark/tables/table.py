@@ -3597,12 +3597,32 @@ def _write_files(
     lays out partitioned tables) and each add entry carries the
     ``partitionValues`` map plus synthesized point-interval stats so
     driver-side pruning (``_prune_by_stats``) skips whole partitions
-    without touching footers."""
+    without touching footers.
+
+    Partitioned writes are optimized writes (Delta's ``optimizeWrite``,
+    reference ``performance_optimization.py:296-308``): the frame is
+    wrapped in a ``REBALANCE`` hint on the partition columns, so each
+    partition value lands in one write task — one file per value per
+    commit instead of one per (input task × value). AQE packs small
+    values into shared tasks and splits a value larger than its
+    advisory size over several tasks, so large writes still get
+    several well-sized files. Callers whose frame carries a layout the
+    files must keep (OPTIMIZE's range partitioning and in-partition
+    sort) pass ``already_partitioned=True``: Spark's
+    ``CollapseRepartition`` would drop that layout under the rebalance.
+    Unpartitioned writes keep their frame's own partitioning."""
     from urllib.parse import unquote
 
     from .delta_interop import synth_partition_stats
 
     staging = Path(root) / f"_staging_{uuid.uuid4().hex}"
+    if partition_columns and not already_partitioned:
+        # quoted columns, not names: physical column-mapping names such
+        # as `col-1a2b` are not valid unquoted SQL identifiers
+        df = df.hint(
+            "rebalance",
+            *[F.col("`" + c.replace("`", "``") + "`") for c in partition_columns],
+        )
     writer = df.write.mode("overwrite")
     if partition_columns:
         writer = writer.partitionBy(*partition_columns)
