@@ -298,9 +298,9 @@ class SharingClient:
         entry = self._resolve(url)
         if not (Path(entry["path"]) / "_delta_log").is_dir():
             raise ValueError(
-                "streaming a share requires a Delta-backed table "
-                "(create(format='delta') or an external _delta_log "
-                "table); batch load_table/load_cdf work on any format"
+                "streaming a share requires a Delta table (a "
+                "_delta_log under the shared path); batch "
+                "load_table/load_cdf work on any format"
             )
         from ..sources.cdf_stream import register_cdf_stream
 

@@ -200,13 +200,12 @@ _IS_COLUMNS_SCHEMA = (
 def _table_kind(spark: SparkSession, t) -> tuple[str, str]:
     """``(table_type, data_source_format)`` for one registered handle.
     Read-only interop handles (foreign ``_delta_log`` the engine may
-    not write) have no ``_log`` backend and are EXTERNAL DELTA; engine
+    not write) have no ``_log`` backend and are EXTERNAL; engine
     tables report MANAGED when they live under the warehouse dir
-    (where metasql's managed CREATE lands them), EXTERNAL otherwise."""
-    log = getattr(t, "_log", None)
-    if log is None:
+    (where metasql's managed CREATE lands them), EXTERNAL otherwise.
+    Every table is DELTA."""
+    if getattr(t, "_log", None) is None:
         return "EXTERNAL", "DELTA"
-    fmt = "DELTA" if type(log).__name__ == "DeltaLogBackend" else "ENGINE"
     try:
         wh = spark.conf.get("spark.sql.warehouse.dir") or ""
     except Exception:  # noqa: BLE001
@@ -214,7 +213,7 @@ def _table_kind(spark: SparkSession, t) -> tuple[str, str]:
     managed = bool(wh) and str(t.root).startswith(
         wh.removeprefix("file:")
     )
-    return ("MANAGED" if managed else "EXTERNAL"), fmt
+    return ("MANAGED" if managed else "EXTERNAL"), "DELTA"
 
 
 _IS_CATALOGS_SCHEMA = "catalog_name string, comment string"

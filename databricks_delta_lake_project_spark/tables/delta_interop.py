@@ -1,13 +1,13 @@
 """Read-only interop with the open Delta Lake table format.
 
-The engine's own ACID format is the original parquet+JSON log in
-``log.py``, but every persistent table in the reference is stored as
-Delta (``/root/reference/config/pipeline_config.py:32-60``,
-``src/utils/delta_lake_features.py:37-41``). This module lets a user
-with existing Delta tables open them without ``delta-spark``: it
-replays the public ``_delta_log`` protocol (JSON commits + parquet
-checkpoints, as specified in the open Delta protocol) into an active
-file set and hands the files to a plain parquet scan.
+Every persistent table in the reference is stored as Delta
+(``/root/reference/config/pipeline_config.py:32-60``,
+``src/utils/delta_lake_features.py:37-41``), and so is every
+``LakeTable`` the engine writes. This module opens any Delta table
+without ``delta-spark``: it replays the public ``_delta_log`` protocol
+(JSON commits + parquet checkpoints, as specified in the open Delta
+protocol) into an active file set and hands the files to a plain
+parquet scan.
 
 Scale notes:
 * Log replay is driver-side but O(|log since checkpoint|) — the same

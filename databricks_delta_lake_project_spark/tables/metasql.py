@@ -96,12 +96,6 @@ def _schema_rows(t: "LakeTable") -> list[tuple[str, str, str | None]]:
     ]
 
 
-def _table_format(t: "LakeTable") -> str:
-    from . import table as _tablemod
-
-    return "engine" if t._log is _tablemod.tlog else "delta"
-
-
 def _created_last_modified(t: "LakeTable") -> tuple[int | None, int | None]:
     log = list(t._log.read_log(t.root))
     if not log:
@@ -116,7 +110,7 @@ def _show_create_stmt(name: str, t: "LakeTable") -> str:
         for f in t.schema.fields
     )
     parts = [f"CREATE TABLE {name} (\n  {cols})"]
-    parts.append("USING DELTA" if _table_format(t) == "delta" else "USING ENGINE")
+    parts.append("USING DELTA")
     props = dict(t.properties())
     pcols = t._write_partition_columns() or []
     if pcols:
@@ -147,7 +141,7 @@ def _describe(spark: SparkSession, t: "LakeTable", extended: bool) -> DataFrame:
         rows.append(("", "", ""))
         rows.append(("# Detailed Table Information", "", ""))
         rows.append(("Location", t.root, ""))
-        rows.append(("Provider", _table_format(t), ""))
+        rows.append(("Provider", "delta", ""))
         rows.append(("Table Version", str(t.version()), ""))
         if created is not None:
             rows.append(("Created At (ms)", str(created), ""))
@@ -177,7 +171,7 @@ def _describe_detail(spark: SparkSession, t: "LakeTable") -> DataFrame:
     props = {str(k): str(v) for k, v in t.properties().items()}
     ccols = [c for c in props.get("engine.clusterBy", "").split(",") if c]
     row = {
-        "format": _table_format(t),
+        "format": "delta",
         "name": t.root.rstrip("/").rsplit("/", 1)[-1],
         "location": t.root,
         "createdAt": created,
@@ -1420,9 +1414,7 @@ def run_metadata(spark: SparkSession, sql: str) -> DataFrame | None:
             # same writer-obligation gate every other metadata commit
             # applies — a table with unhonored writerFeatures must not
             # get a protocol-violating metaData commit from a comment
-            check = getattr(t._log, "check_writable", None)
-            if check is not None:
-                check(t.root)
+            t._log.check_writable(t.root)
             comment = m.group("val")[1:-1].replace("''", "'")
             snap = t._log.latest_version(t.root)
             t._log.commit(

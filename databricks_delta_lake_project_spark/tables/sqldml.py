@@ -585,9 +585,7 @@ def resolve_table(spark: SparkSession, name: str) -> "LakeTable":
         return suffix_hits[0]
     if len(suffix_hits) > 1:
         raise ValueError(f"ambiguous DML table name {name!r}")
-    from .delta_interop import is_delta_table
-
-    if LakeTable.is_table(clean) or is_delta_table(clean):
+    if LakeTable.is_table(clean):
         return LakeTable.for_path(spark, clean)
     raise ValueError(
         f"unknown DML target {name!r}: register it with "
@@ -2082,10 +2080,9 @@ def _prepare_create_target(
     creates)."""
     from pathlib import Path as _P
 
-    from .delta_interop import is_delta_table
     from .table import LakeTable
 
-    exists = LakeTable.is_table(location) or is_delta_table(location)
+    exists = LakeTable.is_table(location)
     if exists and head_m.group("ine"):
         t = LakeTable.for_path(spark, location)
         register_table(spark, clean, t)

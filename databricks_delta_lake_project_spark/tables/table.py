@@ -1,7 +1,10 @@
-"""ACID table on Parquet + JSON commit log ("lakehouse-lite").
+"""ACID Delta Lake table: parquet data files under a ``_delta_log``.
 
-Engine-owned replacement for the Delta-table surface the reference
-uses everywhere (delta-spark is not available in this environment):
+Every table is a Delta table. The commit log is written by
+``delta_log.DeltaLogBackend`` following the public Delta protocol, so
+external Delta readers open the same files in place. The DML, time
+travel and maintenance surface the reference uses everywhere is
+implemented here on open-source Spark, without delta-spark:
 
 * MERGE builder            -> reference ``src/silver/transform_customers.py:174-202``
 * DELETE / UPDATE by pred  -> ``governance/compliance_policies.py:136-295``
@@ -41,7 +44,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from . import log as tlog
+from .delta_log import CHANGES_DIR, DATA_DIR, DeltaLogBackend
 
 _STATS_TYPES = (
     "int",
@@ -189,29 +192,17 @@ def _file_stats(path: Path) -> dict[str, Any]:
 
 
 class LakeTable:
-    """Handle on an ACID parquet table rooted at ``path``.
+    """Handle on a Delta table rooted at ``path``.
 
-    The commit log speaks one of two formats behind the same duck-typed
-    backend surface: the engine's own parquet+JSON log (``log.py``) or
-    the open Delta Lake ``_delta_log`` protocol
-    (``delta_log.DeltaLogBackend``) — every write operation (append,
-    MERGE, DELETE, UPDATE, OPTIMIZE, RESTORE, ...) is format-agnostic
-    copy-on-write over whichever log owns the table."""
+    Every commit goes through the open Delta Lake ``_delta_log``
+    protocol (``delta_log.DeltaLogBackend``); every write operation
+    (append, MERGE, DELETE, UPDATE, OPTIMIZE, RESTORE, ...) is
+    copy-on-write, or a deletion vector where the table enables them."""
 
-    def __init__(self, spark: SparkSession, path: str, log_backend=None):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.root = str(Path(path))
-        if log_backend is not None:
-            self._log = log_backend
-        elif tlog.latest_version(self.root) is not None:
-            self._log = tlog
-        else:
-            from .delta_interop import is_delta_table
-            from .delta_log import DeltaLogBackend
-
-            if not is_delta_table(self.root):
-                raise ValueError(f"not a LakeTable (no commits): {path}")
-            self._log = DeltaLogBackend(spark)
+        self._log = DeltaLogBackend(spark)
         if self._log.latest_version(self.root) is None:
             raise ValueError(f"not a LakeTable (no commits): {path}")
 
@@ -225,37 +216,25 @@ class LakeTable:
         df: DataFrame | None = None,
         schema: StructType | None = None,
         properties: dict[str, Any] | None = None,
-        format: str = "engine",
+        format: str = "delta",
         partition_by: list[str] | None = None,
     ) -> "LakeTable":
-        """Create a table. ``format="engine"`` uses the engine's own
-        parquet+JSON log; ``format="delta"`` persists the commit log as
-        a real Delta Lake ``_delta_log`` so external Delta tooling can
-        read (and keep writing) the table. ``partition_by`` (Delta
-        format only) lays data out hive-style with ``partitionValues``
-        stamped on every add action — the engine-native format instead
-        skips files by footer stats and stays unpartitioned."""
+        """Create a Delta table: the commit log is a real Delta Lake
+        ``_delta_log``, so external Delta tooling can read (and keep
+        writing) it. ``format`` accepts only ``"delta"``; any other
+        value raises. ``partition_by`` lays data out hive-style with
+        ``partitionValues`` stamped on every add action."""
+        if format != "delta":
+            raise ValueError(
+                f"unknown table format {format!r}: tables are Delta-only "
+                "(omit format or pass format='delta')"
+            )
         root = str(Path(path))
-        if format == "delta":
-            from .delta_log import DeltaLogBackend
-
-            log = DeltaLogBackend(spark)
-        elif format == "engine":
-            if partition_by:
-                raise ValueError(
-                    "partition_by requires format='delta' — engine-native "
-                    "tables skip by footer stats instead of hive layout"
-                )
-            log = tlog
-        else:
-            raise ValueError(f"unknown table format: {format!r}")
+        log = DeltaLogBackend(spark)
         log.ensure_layout(root)
         if log.latest_version(root) is not None:
             raise ValueError(f"table already exists: {path}")
-        extra = (
-            {"partition_columns": list(partition_by)} if partition_by else {}
-        )
-        if format == "delta" and str(
+        if str(
             (properties or {}).get("delta.columnMapping.mode", "none")
         ).lower() in ("name", "id"):
             # creating a MAPPED table: every field needs columnMapping
@@ -273,9 +252,9 @@ class LakeTable:
             log.commit(
                 root, "CREATE TABLE", [], [], mapped_schema.json(),
                 properties=props,
-                **extra,
+                partition_columns=partition_by,
             )
-            t = cls(spark, root, log_backend=log)
+            t = cls(spark, root)
             if df is not None:
                 t.append(df)
             return t
@@ -285,7 +264,7 @@ class LakeTable:
             log.commit(
                 root, "CREATE TABLE", [], [], schema.json(),
                 properties=properties or {},
-                **extra,
+                partition_columns=partition_by,
             )
         else:
             # the initial CTAS load is a write like any other: declared
@@ -311,12 +290,12 @@ class LakeTable:
                 root, "CREATE TABLE AS SELECT", adds, [], schema_json,
                 metrics={"numOutputRows": n, "numFiles": len(adds)},
                 properties=properties or {},
-                **extra,
+                partition_columns=partition_by,
             )
-            t = cls(spark, root, log_backend=log)
+            t = cls(spark, root)
             t._write_cdf(df, "insert", log.latest_version(root))
             return t
-        return cls(spark, root, log_backend=log)
+        return cls(spark, root)
 
     @classmethod
     def convert_parquet(
@@ -340,9 +319,7 @@ class LakeTable:
         from .delta_interop import synth_partition_stats
 
         root = Path(path)
-        if (root / "_delta_log").is_dir() or tlog.latest_version(
-            str(root)
-        ) is not None:
+        if (root / "_delta_log").is_dir():
             raise ValueError(f"already a table: {path}")
         files = sorted(
             p
@@ -398,9 +375,6 @@ class LakeTable:
             )
         schema = StructType(fields)
 
-        log = None
-        from .delta_log import DeltaLogBackend
-
         log = DeltaLogBackend(spark)
         log.ensure_layout(str(root))
         log.commit(
@@ -413,17 +387,19 @@ class LakeTable:
             properties=properties or {},
             partition_columns=pcols or None,
         )
-        return cls(spark, str(root), log_backend=log)
+        return cls(spark, str(root))
 
     @classmethod
     def is_table(cls, path: str) -> bool:
-        return tlog.latest_version(str(Path(path))) is not None
+        """True when ``path`` holds a Delta table: a ``_delta_log``
+        with at least one JSON commit."""
+        from .delta_interop import is_delta_table
+
+        return is_delta_table(str(Path(path)))
 
     @classmethod
     def for_path(cls, spark: SparkSession, path: str):
-        """Open a table at ``path``. A native LakeTable opens
-        read-write. A directory carrying a real Delta Lake
-        ``_delta_log`` opens READ-WRITE through the Delta log backend
+        """Open the Delta table at ``path``. It opens READ-WRITE
         for every readable SHAPE — partitioned, column-mapped, live
         deletion vectors — with appends/MERGEs landing as real
         ``_delta_log`` commits; CHECK constraints and invariants are
@@ -435,21 +411,17 @@ class LakeTable:
         surface), so existing Delta tables from the reference stack
         remain queryable."""
         root = str(Path(path))
-        if tlog.latest_version(root) is None:
-            from .delta_interop import DeltaInteropTable, is_delta_table
-            from .delta_log import DeltaLogBackend
+        if cls.is_table(root):
+            try:
+                DeltaLogBackend(spark).check_writable(root)
+            except NotImplementedError:
+                # not writable by this engine — keep it queryable
+                # (readable cases) or failing loudly (unreadable
+                # feature refusals surface again on to_df)
+                from .delta_interop import DeltaInteropTable
 
-            if is_delta_table(root):
-                backend = DeltaLogBackend(spark)
-                try:
-                    backend.check_writable(root)
-                except NotImplementedError:
-                    # not writable by this engine — keep it queryable
-                    # (readable cases) or failing loudly (unreadable
-                    # feature refusals surface again on to_df)
-                    return DeltaInteropTable(spark, root)
-                return cls(spark, root, log_backend=backend)
-        return cls(spark, path)
+                return DeltaInteropTable(spark, root)
+        return cls(spark, root)
 
     # -- reads -------------------------------------------------------------
 
@@ -475,8 +447,8 @@ class LakeTable:
         with_row_index: bool = False,
     ) -> DataFrame:
         """Scan a file set under the table schema. Entries carrying a
-        ``deletionVector`` descriptor (Delta-backed tables) have their
-        marked row indices dropped via a broadcast anti-join — every
+        ``deletionVector`` descriptor have their marked row indices
+        dropped via a broadcast anti-join — every
         caller (snapshot reads, touched-file probes, copy-on-write
         rewrites) therefore sees only ALIVE rows. ``with_row_index``
         additionally exposes ``__file``/``__pos`` metadata columns (the
@@ -632,8 +604,6 @@ class LakeTable:
         expression evaluates FALSE (NULL passes, like CHECK in every
         SQL engine). One aggregation covers all constraints; zero cost
         when none are defined (the overwhelmingly common case)."""
-        # both backends implement table_properties; an error here must
-        # surface, not silently disable enforcement
         props = self._log.table_properties(self.root)
         checks = _collect_constraint_checks(props, schema)
         _raise_on_constraint_violations(df, checks)
@@ -958,16 +928,10 @@ class LakeTable:
 
     def txn_version(self, app_id: str) -> int:
         """Highest committed transaction version for ``app_id``, or -1.
-        Mirrors Delta's idempotent-writer tracking (txnAppId/txnVersion).
-        Seeds from the newest checkpoint so replay detection is
-        O(checkpoint interval), not O(table history)."""
-        ckpt = self._log.latest_checkpoint(self.root)
-        latest = int(ckpt.get("txns", {}).get(app_id, -1)) if ckpt else -1
-        for c in self._log.read_log(self.root, use_checkpoint=True):
-            txn = c.get("operationParameters", {}).get("txn")
-            if txn and txn.get("appId") == app_id:
-                latest = max(latest, int(txn["version"]))
-        return latest
+        Mirrors Delta's idempotent-writer tracking (txnAppId/txnVersion):
+        the snapshot folds ``txn`` actions from the checkpoint on, and a
+        warm call applies only the commits since the last one."""
+        return self._log.txn_version(self.root, app_id)
 
     def append_txn(self, df: DataFrame, app_id: str, version: int) -> int:
         """Idempotent append: commit ``df`` tagged (app_id, version);
@@ -1207,8 +1171,8 @@ class LakeTable:
 
         * ``"rewrite"`` — copy-on-write: rewrite touched files without
           the matching rows. Always available.
-        * ``"dv"`` — deletion vectors (Delta-backed tables only): mark
-          the matching ROW INDICES in a roaring bitmap sidecar and
+        * ``"dv"`` — deletion vectors: mark the matching ROW INDICES
+          in a roaring bitmap sidecar and
           re-add the untouched data file with the DV descriptor. Cost
           is O(deleted rows), not O(touched-file bytes) — the modern
           Delta small-delete path (a GDPR single-subject erasure
@@ -1216,9 +1180,9 @@ class LakeTable:
           deleted set exceeds ``dv_max_rows`` (the positions pass
           through the driver, bounded by design — DV-sized deletes;
           bulk deletes want the rewrite anyway).
-        * ``"auto"`` — ``dv`` when the table is Delta-backed AND
-          ``delta.enableDeletionVectors`` is set (the property real
-          Delta writers key on), else ``rewrite``.
+        * ``"auto"`` — ``dv`` when ``delta.enableDeletionVectors`` is
+          set (the property real Delta writers key on), else
+          ``rewrite``.
         """
         if strategy not in ("auto", "dv", "rewrite"):
             raise ValueError(f"unknown DELETE strategy: {strategy!r}")
@@ -1254,21 +1218,8 @@ class LakeTable:
                     Path(self.root) / e["path"]
                 ).metadata.num_rows
         n_whole = sum(_alive_rows(e) for e in whole)
-        dv_capable = self._log is not tlog
-        if strategy == "dv" and not dv_capable:
-            raise ValueError(
-                "deletion vectors need the Delta log backend "
-                "(create(format='delta') or a Delta table via for_path)"
-            )
         if strategy == "auto":
-            props = self.properties()
-            dv_enabled = str(
-                props.get(
-                    "delta.enableDeletionVectors",
-                    props.get("enableDeletionVectors", False),
-                )
-            ).lower() in ("true", "1")
-            strategy = "dv" if (dv_capable and dv_enabled) else "rewrite"
+            strategy = "dv" if self._dv_enabled() else "rewrite"
         if strategy == "dv":
             result = self._delete_dv(
                 cond, bounds, dv_max_rows, whole, n_whole, snap
@@ -1522,10 +1473,10 @@ class LakeTable:
         """UPDATE by predicate (``compliance_policies.py:277-295``).
 
         Strategies mirror :meth:`delete`: ``"rewrite"`` rewrites the
-        touched files; ``"dv"`` (Delta-backed tables) marks the OLD
-        versions of matched rows in deletion vectors and appends only
-        the updated rows as new files — cost O(matched rows), the way
-        modern Delta writers run UPDATE/MERGE with DVs enabled;
+        touched files; ``"dv"`` marks the OLD versions of matched rows
+        in deletion vectors and appends only the updated rows as new
+        files — cost O(matched rows), the way modern Delta writers run
+        UPDATE/MERGE with DVs enabled;
         ``"auto"`` picks dv when ``delta.enableDeletionVectors`` is
         set. Falls back to rewrite past ``dv_max_rows``."""
         if strategy not in ("auto", "dv", "rewrite"):
@@ -1538,21 +1489,8 @@ class LakeTable:
         cond = F.expr(condition) if isinstance(condition, str) else condition
         snap = self._log.latest_version(self.root)
         bounds = predicate_bounds(condition) if isinstance(condition, str) else {}
-        dv_capable = self._log is not tlog
-        if strategy == "dv" and not dv_capable:
-            raise ValueError(
-                "deletion vectors need the Delta log backend "
-                "(create(format='delta') or a Delta table via for_path)"
-            )
         if strategy == "auto":
-            props = self.properties()
-            dv_enabled = str(
-                props.get(
-                    "delta.enableDeletionVectors",
-                    props.get("enableDeletionVectors", False),
-                )
-            ).lower() in ("true", "1")
-            strategy = "dv" if (dv_capable and dv_enabled) else "rewrite"
+            strategy = "dv" if self._dv_enabled() else "rewrite"
         if strategy == "dv":
             result = self._update_dv(cond, set, bounds, dv_max_rows, snap)
             if result is not None:
@@ -1908,16 +1846,7 @@ class LakeTable:
         # later delta.enableDeletionVectors would take DML paths the
         # v0 snapshot never had)
         pcols = list(self._log.partition_columns(self.root, v))
-        from .delta_interop import is_delta_table
-
-        if (
-            self._log.latest_version(target_root) is not None
-            or LakeTable.is_table(target_root)
-            or is_delta_table(target_root)
-        ):
-            # covers FOREIGN tables too: an engine-backed clone into a
-            # directory holding someone else's _delta_log would plant
-            # a second commit log and fork the table
+        if LakeTable.is_table(target_root):
             raise ValueError(f"table already exists: {target_path}")
         self._log.ensure_layout(target_root)
         if shallow:
@@ -2007,9 +1936,6 @@ class LakeTable:
                 shutil.copy2(srcf, dstf)
         props = dict(self._log.table_properties(self.root, v))
         props.update(properties or {})
-        kwargs: dict[str, Any] = {}
-        if pcols and self._log is not tlog:
-            kwargs["partition_columns"] = pcols
         self._log.commit(
             target_root,
             "CLONE",
@@ -2023,9 +1949,9 @@ class LakeTable:
             },
             properties=props,
             schema_authoritative=True,
-            **kwargs,
+            partition_columns=pcols,
         )
-        return LakeTable(self.spark, target_root, log_backend=self._log)
+        return LakeTable(self.spark, target_root)
 
     def replace_where(
         self,
@@ -2049,9 +1975,7 @@ class LakeTable:
         partition tuple). Each disjunct prunes and whole-file-matches
         INDEPENDENTLY (an OR predicate as one string would defeat the
         stats fast path), the union swaps in ONE commit."""
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         preds = [predicate] if isinstance(predicate, str) else list(predicate)
         if not preds:
             raise ValueError("replace_where: empty predicate list")
@@ -2299,9 +2223,7 @@ class LakeTable:
                 "numRemovedFiles": 0,
                 "dryRun": dry_run,
             }
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         self._log.commit(
             self.root,
             "FSCK",
@@ -2355,16 +2277,10 @@ class LakeTable:
     def rename_column(self, old: str, new: str) -> int:
         """Metadata-only column rename (reference evolution surface
         ``delta_lake_features.py:182-262``). Requires a column-mapped
-        Delta-backed table: the logical name changes in the schema, the
-        columnMapping physicalName stays, no data file is rewritten,
-        and pre-rename versions keep time-traveling under their old
-        names."""
-        if self._log is tlog:
-            raise NotImplementedError(
-                "RENAME COLUMN needs the Delta log backend with column "
-                "mapping (create(format='delta', properties="
-                "{'delta.columnMapping.mode': 'name'}))"
-            )
+        table (``delta.columnMapping.mode``): the logical name changes
+        in the schema, the columnMapping physicalName stays, no data
+        file is rewritten, and pre-rename versions keep time-traveling
+        under their old names."""
         self._log.check_writable(self.root)
         v = self._log.rename_column(self.root, old, new)
         return self._migrate_column_props(old, new) or v
@@ -2373,25 +2289,17 @@ class LakeTable:
         """Metadata-only column drop (column-mapped Delta tables): the
         logical field leaves the schema; existing parquet keeps the
         physical column for pre-drop time travel."""
-        if self._log is tlog:
-            raise NotImplementedError(
-                "DROP COLUMN needs the Delta log backend with column "
-                "mapping (create(format='delta', properties="
-                "{'delta.columnMapping.mode': 'name'}))"
-            )
         self._log.check_writable(self.root)
         v = self._log.drop_column(self.root, col)
         return self._migrate_column_props(col, None) or v
 
     def _migrate_column_props(self, old: str, new: str | None) -> int | None:
-        """Move (rename) or tombstone (drop) the per-column governance
+        """Move (rename) or remove (drop) the per-column governance
         properties — ``engine.coltags.<old>.*`` tags and the
         ``engine.mask.<old>`` mask binding — after a column rename/drop,
         so classification follows the column like UC tags do. One extra
         metadata commit, and only when such properties exist; returns
-        the commit version or None when nothing needed to move. Only
-        reachable on the Delta log backend (rename/drop raise on the
-        engine log), so plain ``pop`` deletion is correct."""
+        the commit version or None when nothing needed to move."""
         tag_prefix = f"engine.coltags.{old}."
         mask_key = f"engine.mask.{old}"
         props = dict(self.properties())
@@ -2423,7 +2331,7 @@ class LakeTable:
 
     def add_columns(self, cols: "StructType | str") -> int:
         """ALTER TABLE ADD COLUMNS — metadata-only additive schema
-        evolution on BOTH backends (reference
+        evolution (reference
         ``delta_lake_features.py:258-262``): the new nullable fields
         append to the schema in one commit; no data file is touched and
         existing rows null-fill on read (the same contract
@@ -2446,9 +2354,7 @@ class LakeTable:
         if not added:
             raise ValueError("ADD COLUMNS: empty column list")
         evolved = StructType(list(schema.fields) + added)
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         return self._log.commit(
             self.root,
@@ -2483,9 +2389,7 @@ class LakeTable:
             )
             for f in schema.fields
         ]
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         return self._log.commit(
             self.root,
@@ -2505,20 +2409,12 @@ class LakeTable:
         ``engine.tags.<k>`` table properties so they ride the commit
         log, survive restarts, and show in DESCRIBE EXTENDED /
         SHOW TBLPROPERTIES."""
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         props = dict(self.properties())
         if unset:
             for k in tags:
-                if self._log is tlog:
-                    # engine log merges per-commit dicts on replay: a
-                    # popped key would resurrect from the older commit,
-                    # so deletion is a None tombstone
-                    props[f"engine.tags.{k}"] = None
-                else:
-                    props.pop(f"engine.tags.{k}", None)
+                props.pop(f"engine.tags.{k}", None)
         else:
             for k, v in tags.items():
                 props[f"engine.tags.{k}"] = str(v)
@@ -2543,9 +2439,7 @@ class LakeTable:
         ``_enforce_constraints`` (zero cost until a constraint
         exists). At 100 TB the validation is one full-scan AND-agg —
         the price Databricks itself pays; the commit is metadata."""
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         cname = name.lower()
         key = f"delta.constraints.{cname}"
         snap = self._log.latest_version(self.root)
@@ -2572,13 +2466,9 @@ class LakeTable:
 
     def drop_constraint(self, name: str, if_exists: bool = False) -> int | None:
         """``ALTER TABLE t DROP CONSTRAINT [IF EXISTS] name`` —
-        metadata-only; the per-backend unset discipline mirrors
-        ``set_tags`` (engine log replays merge-on-read so deletion is
-        a None tombstone; the Delta backend snapshots the full
-        configuration so the key is simply omitted)."""
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        metadata-only; every metaData action snapshots the full
+        configuration, so the key is simply omitted."""
+        self._log.check_writable(self.root)
         cname = name.lower()
         key = f"delta.constraints.{cname}"
         snap = self._log.latest_version(self.root)
@@ -2587,10 +2477,7 @@ class LakeTable:
             if if_exists:
                 return None
             raise ValueError(f"no such constraint {cname!r} on {self.root}")
-        if self._log is tlog:
-            props[key] = None
-        else:
-            props.pop(key)
+        props.pop(key)
         return self._log.commit(
             self.root,
             "DROP CONSTRAINT",
@@ -2604,20 +2491,13 @@ class LakeTable:
 
     def unset_properties(self, keys: list[str]) -> int:
         """``ALTER TABLE t UNSET TBLPROPERTIES (...)`` — metadata-only,
-        same per-backend unset discipline as ``set_tags`` /
+        keys are omitted from the configuration snapshot, like
         ``drop_constraint``."""
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         props = dict(self.properties())
         for k in keys:
-            if k not in props:
-                continue
-            if self._log is tlog:
-                props[k] = None
-            else:
-                props.pop(k)
+            props.pop(k, None)
         return self._log.commit(
             self.root,
             "UNSET TBLPROPERTIES",
@@ -2667,9 +2547,7 @@ class LakeTable:
             else:
                 meta["engine.notNull"] = True
             fields.append(StructField(f.name, f.dataType, nullable, meta))
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         return self._log.commit(
             self.root,
@@ -2743,9 +2621,7 @@ class LakeTable:
                 "safe widening (integer up-chain, float->double, or "
                 "decimal precision/scale growth)"
             )
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         fields = [
             StructField(f.name, new if f.name == actual else f.dataType,
@@ -2792,9 +2668,7 @@ class LakeTable:
             else:
                 meta["CURRENT_DEFAULT"] = expr
             fields.append(StructField(f.name, f.dataType, f.nullable, meta))
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         return self._log.commit(
             self.root,
@@ -2839,20 +2713,13 @@ class LakeTable:
             raise ValueError(
                 f"column tags need an un-dotted column name, got {col!r}"
             )
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         props = dict(self.properties())
         for k, v in tags.items():
             key = f"engine.coltags.{col}.{k}"
             if unset:
-                if self._log is tlog:
-                    # engine log merges per-commit property dicts on
-                    # replay — deletion must be a None tombstone
-                    props[key] = None
-                else:
-                    props.pop(key, None)
+                props.pop(key, None)
             else:
                 props[key] = str(v)
         return self._log.commit(
@@ -2891,17 +2758,12 @@ class LakeTable:
         names = {f.name for f in self.schema.fields}
         if col not in names:
             raise ValueError(f"no such column {col!r} (have {sorted(names)})")
-        check = getattr(self._log, "check_writable", None)
-        if check is not None:
-            check(self.root)
+        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         props = dict(self.properties())
         key = f"engine.mask.{col}"
         if function is None:
-            if self._log is tlog:
-                props[key] = None
-            else:
-                props.pop(key, None)
+            props.pop(key, None)
         else:
             props[key] = function
         return self._log.commit(
@@ -2935,7 +2797,7 @@ class LakeTable:
         for p in ddir.rglob("*"):
             if not p.is_file():
                 continue
-            rel = f"{tlog.DATA_DIR}/{p.relative_to(ddir).as_posix()}"
+            rel = f"{DATA_DIR}/{p.relative_to(ddir).as_posix()}"
             if rel not in active and p.stat().st_mtime < cutoff:
                 victims.append(rel)
         # protocol change data ages out with the retention window, like
@@ -2951,11 +2813,10 @@ class LakeTable:
         # orphaned deletion-vector sidecars: a rewrite/compaction drops
         # the DV reference and leaves the .bin behind — collect any bin
         # that NO version references (time travel included)
-        if hasattr(self._log, "referenced_dv_files"):
-            kept_dvs = self._log.referenced_dv_files(self.root)
-            for p in Path(self.root).glob("deletion_vector_*.bin"):
-                if p.resolve() not in kept_dvs and p.stat().st_mtime < cutoff:
-                    victims.append(p.name)
+        kept_dvs = self._log.referenced_dv_files(self.root)
+        for p in Path(self.root).glob("deletion_vector_*.bin"):
+            if p.resolve() not in kept_dvs and p.stat().st_mtime < cutoff:
+                victims.append(p.name)
         if not dry_run:
             for rel in victims:
                 (Path(self.root) / rel).unlink()
@@ -2966,6 +2827,14 @@ class LakeTable:
         return victims
 
     # -- change data feed --------------------------------------------------
+
+    def _dv_enabled(self) -> bool:
+        props = self.properties()
+        v = props.get(
+            "delta.enableDeletionVectors",
+            props.get("enableDeletionVectors", False),
+        )
+        return str(v).lower() in ("true", "1")
 
     def _cdf_enabled(self) -> bool:
         # both spellings accepted: the engine's own short key and the
@@ -2991,7 +2860,7 @@ class LakeTable:
             return
         out = (
             Path(self.root)
-            / tlog.CHANGES_DIR
+            / CHANGES_DIR
             / f"{CDF_VERSION_COL}={version}"
         )
         df.withColumn(CDF_TYPE_COL, F.lit(change_type)).write.mode(
@@ -3002,17 +2871,16 @@ class LakeTable:
         self, frames: list[tuple[str, DataFrame]]
     ) -> list[dict[str, Any]]:
         """Materialize PROTOCOL change data for a commit about to land
-        on a CDF-enabled Delta-format table: the (change_type, frame)
+        on a CDF-enabled table: the (change_type, frame)
         pairs union into ``_change_data`` parquet (physical column
         names on mapped tables, hive dirs on partitioned ones) and the
         returned ``cdc`` actions ride in the SAME commit — which is
         what makes the table's UPDATE/DELETE/MERGE history readable by
-        any external Delta CDF reader, not only this engine. Engine-
-        format tables return [] (they use the ``_changes/`` dir). The
+        any external Delta CDF reader, not only this engine. The
         ``_changes/`` dir is still written post-commit as the
         streaming-CDF tail; the duplication is bounded by changed rows
         and only paid when CDF is enabled."""
-        if self._log is tlog or not self._cdf_enabled():
+        if not self._cdf_enabled():
             return []
         union: DataFrame | None = None
         for change_type, df in frames:
@@ -3039,8 +2907,8 @@ class LakeTable:
         table schema + _change_type + _commit_version.
 
         Engine-written commits read their materialized change files
-        (``_changes/``). On a DELTA-backed table, versions with no
-        change files — commits landed by OTHER Delta writers — serve
+        (``_changes/``). Versions with no change files — commits
+        landed by OTHER Delta writers — serve
         the commit's ``cdc`` actions when present (the
         ``_change_data`` files a CDF-enabled Delta writer materializes
         for UPDATE/DELETE/MERGE, holding rows + ``_change_type``), else
@@ -3050,7 +2918,7 @@ class LakeTable:
         reconstructible row-level delta, so it is refused loudly
         instead of returning wrong changes (reference surface:
         ``delta_sharing_recipient.py:180-205``)."""
-        base = Path(self.root) / tlog.CHANGES_DIR
+        base = Path(self.root) / CHANGES_DIR
         have: dict[int, str] = {}
         if base.is_dir():
             for d in base.iterdir():
@@ -3068,50 +2936,49 @@ class LakeTable:
             frames.append(
                 self.spark.read.option("basePath", str(base)).parquet(*picked)
             )
-        if self._log is not tlog:
-            for v in self._log.list_versions(self.root):
-                if not _in_range(v) or v in have:
-                    continue
-                c = self._log.read_commit(self.root, v)
-                if c.get("operation") in ("OPTIMIZE", "REORG"):
-                    continue  # dataChange=false: no logical change
-                if c.get("cdc"):
-                    # protocol CDF: this version's changes come
-                    # EXCLUSIVELY from its _change_data files
-                    from pyspark.sql.types import StringType, StructField
+        for v in self._log.list_versions(self.root):
+            if not _in_range(v) or v in have:
+                continue
+            c = self._log.read_commit(self.root, v)
+            if c.get("operation") in ("OPTIMIZE", "REORG"):
+                continue  # dataChange=false: no logical change
+            if c.get("cdc"):
+                # protocol CDF: this version's changes come
+                # EXCLUSIVELY from its _change_data files
+                from pyspark.sql.types import StringType, StructField
 
-                    from .delta_interop import DeltaInteropTable, _replay
+                from .delta_interop import DeltaInteropTable, _replay
 
-                    state = _replay(self.root, v)
-                    schema_v = StructType.fromJson(
-                        json.loads(state.schema_json)
-                    )
-                    cdc_schema = StructType(
-                        list(schema_v.fields)
-                        + [StructField(CDF_TYPE_COL, StringType())]
-                    )
-                    it = DeltaInteropTable(self.spark, self.root)
-                    frames.append(
-                        it._scan(state, cdc_schema, c["cdc"]).withColumn(
-                            CDF_VERSION_COL, F.lit(v).cast("long")
-                        )
-                    )
-                    continue
-                if c.get("remove"):
-                    raise NotImplementedError(
-                        f"CDF for version {v}: commit "
-                        f"({c.get('operation')}) rewrote files outside "
-                        "this engine without cdc actions; row-level "
-                        "changes are not reconstructible from the "
-                        "_delta_log alone"
-                    )
-                if not c.get("add"):
-                    continue
-                frames.append(
-                    self._read_files(c["add"], version=v)
-                    .withColumn(CDF_TYPE_COL, F.lit("insert"))
-                    .withColumn(CDF_VERSION_COL, F.lit(v).cast("long"))
+                state = _replay(self.root, v)
+                schema_v = StructType.fromJson(
+                    json.loads(state.schema_json)
                 )
+                cdc_schema = StructType(
+                    list(schema_v.fields)
+                    + [StructField(CDF_TYPE_COL, StringType())]
+                )
+                it = DeltaInteropTable(self.spark, self.root)
+                frames.append(
+                    it._scan(state, cdc_schema, c["cdc"]).withColumn(
+                        CDF_VERSION_COL, F.lit(v).cast("long")
+                    )
+                )
+                continue
+            if c.get("remove"):
+                raise NotImplementedError(
+                    f"CDF for version {v}: commit "
+                    f"({c.get('operation')}) rewrote files outside "
+                    "this engine without cdc actions; row-level "
+                    "changes are not reconstructible from the "
+                    "_delta_log alone"
+                )
+            if not c.get("add"):
+                continue
+            frames.append(
+                self._read_files(c["add"], version=v)
+                .withColumn(CDF_TYPE_COL, F.lit("insert"))
+                .withColumn(CDF_VERSION_COL, F.lit(v).cast("long"))
+            )
         if not frames:
             schema = self.schema.add(CDF_TYPE_COL, "string").add(
                 CDF_VERSION_COL, "long"
@@ -3125,7 +2992,7 @@ class LakeTable:
     def changes_dir(self) -> str:
         """Append-only CDF directory — usable directly as a Structured
         Streaming file source for downstream incremental pipelines."""
-        return str(Path(self.root) / tlog.CHANGES_DIR)
+        return str(Path(self.root) / CHANGES_DIR)
 
     def read_changes_stream(self) -> DataFrame:
         """Streaming CDF scan (S4-equivalent: the OSS
@@ -3627,8 +3494,8 @@ def _write_files(
     if partition_columns:
         writer = writer.partitionBy(*partition_columns)
     writer.parquet(str(staging))
-    ddir = Path(root) / subdir if subdir else tlog.data_dir(root)
-    rel_prefix = subdir if subdir else tlog.DATA_DIR
+    rel_prefix = subdir if subdir else DATA_DIR
+    ddir = Path(root) / rel_prefix
     ddir.mkdir(parents=True, exist_ok=True)
     adds = []
     total_rows = 0
@@ -3801,15 +3668,15 @@ class MergeBuilder:
         """Run the MERGE. ``strategy``:
 
         * ``"rewrite"`` — copy-on-write: rewrite every touched file.
-        * ``"dv"`` (Delta-backed tables) — the modern Delta MERGE
+        * ``"dv"`` — the modern Delta MERGE
           shape: matched rows hit by an update/delete clause are
           DV-marked in place and only the post-image + inserted rows
           land as new files — cost O(changed rows), never
           O(touched-file bytes); rows in touched files that the MERGE
           did not modify are never rewritten. Falls back to rewrite
           past ``dv_max_rows``.
-        * ``"auto"`` — ``dv`` when Delta-backed AND
-          ``delta.enableDeletionVectors`` is set, else rewrite.
+        * ``"auto"`` — ``dv`` when ``delta.enableDeletionVectors`` is
+          set, else rewrite.
 
         ``retries``: an OCC loser (another writer committed a
         conflicting version between this MERGE's snapshot and its
@@ -3991,21 +3858,7 @@ class MergeBuilder:
             raise ValueError(f"unknown MERGE strategy: {strategy!r}")
         snap = t._log.latest_version(t.root)
         if strategy == "auto":
-            props = t.properties()
-            dv_enabled = str(
-                props.get(
-                    "delta.enableDeletionVectors",
-                    props.get("enableDeletionVectors", False),
-                )
-            ).lower() in ("true", "1")
-            strategy = (
-                "dv" if (t._log is not tlog and dv_enabled) else "rewrite"
-            )
-        elif strategy == "dv" and t._log is tlog:
-            raise ValueError(
-                "deletion vectors need the Delta log backend "
-                "(create(format='delta') or a Delta table via for_path)"
-            )
+            strategy = "dv" if t._dv_enabled() else "rewrite"
         dv_mode = strategy == "dv"
         tgt_cols = [f.name for f in work_schema.fields]
         files = t._files()

@@ -1,8 +1,8 @@
 """ALTER TABLE ADD/DROP CONSTRAINT + RENAME TO (beyond the reference's
 surface; Delta's public constraint DDL and the external-table rename
 contract). ADD validates every existing row in one aggregation pass
-before the property lands; DROP is metadata-only with per-backend
-unset discipline; RENAME rebinds the registry name without touching
+before the property lands; DROP is metadata-only (the key leaves the
+configuration snapshot); RENAME rebinds the registry name without touching
 data or log."""
 
 from __future__ import annotations
@@ -65,11 +65,10 @@ def test_add_constraint_refuses_on_existing_violation(spark, tmp_path):
         t.add_constraint("POS", "amount > 1")
 
 
-@pytest.mark.parametrize("fmt", ["delta", "engine"])
+@pytest.mark.parametrize("fmt", ["delta"])
 def test_drop_constraint_both_backends(spark, tmp_path, fmt):
-    """The unset works on BOTH log backends: the Delta backend omits
-    the key from its full configuration snapshot; the engine-native
-    merge-on-replay log needs a None tombstone."""
+    """The unset omits the key from the full configuration snapshot,
+    so a fresh replay does not resurrect it."""
     name = f"con_drop_{fmt}"
     t = _mk(spark, tmp_path, name, fmt=fmt)
     t.add_constraint("amount_pos", "amount > 0")
@@ -82,7 +81,6 @@ def test_drop_constraint_both_backends(spark, tmp_path, fmt):
     assert res["dropped"] is True
     assert t.constraints() == {}
     # enforcement is gone — and stays gone across a fresh handle
-    # (the fold must not resurrect the key from the older commit)
     t.append(spark.createDataFrame([Row(id=9, amount=-1.0)]))
     fresh = LakeTable(spark, t.root)
     assert fresh.constraints() == {}

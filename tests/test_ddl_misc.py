@@ -25,7 +25,7 @@ def _mk(spark, tmp_path, name, fmt="delta"):
     return t
 
 
-@pytest.mark.parametrize("fmt", ["delta", "engine"])
+@pytest.mark.parametrize("fmt", ["delta"])
 def test_unset_tblproperties_both_backends(spark, tmp_path, fmt):
     t = _mk(spark, tmp_path, f"unset_{fmt}", fmt=fmt)
     res = sqldml.run_dml(
@@ -33,8 +33,8 @@ def test_unset_tblproperties_both_backends(spark, tmp_path, fmt):
     )
     assert res["operation"] == "UNSET TBLPROPERTIES"
     assert "k1" not in t.properties() and t.properties()["k2"] == "y"
-    # gone across a fresh handle too (the merge-on-replay fold must
-    # not resurrect it)
+    # gone across a fresh handle too (an independent replay must not
+    # resurrect it)
     assert "k1" not in LakeTable(spark, t.root).properties()
     with pytest.raises(ValueError, match="unknown keys"):
         sqldml.run_dml(

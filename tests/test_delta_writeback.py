@@ -333,14 +333,6 @@ def test_dv_falls_back_to_rewrite_when_large(spark, tmp_path):
     assert t.to_df().count() == 50
 
 
-def test_dv_strategy_refused_on_engine_format(spark, tmp_path):
-    t = LakeTable.create(
-        spark, str(tmp_path / "eng"), df=spark.range(5)
-    )
-    with pytest.raises(ValueError, match="Delta log backend"):
-        t.delete("id = 1", strategy="dv")
-
-
 def test_commit_race_put_if_absent(spark, tmp_path):
     """Optimistic concurrency: when another writer lands version N
     first, the backend recomputes and lands N+1 instead of clobbering."""
@@ -1170,8 +1162,8 @@ def test_check_constraints_and_invariants_enforced(spark, tmp_path):
 
 def test_constraint_enforcement_edges(spark, tmp_path):
     """Review-driven edge batch: the CDF post-image carries regenerated
-    generated-column values; CTAS validates the initial load; the
-    native engine format preserves invariant metadata across appends;
+    generated-column values; CTAS validates the initial load; a
+    default-format table preserves invariant metadata across appends;
     pre-existing violating rows never block maintenance ops; typo'd
     strategies raise."""
     from pyspark.sql import Row
@@ -1214,7 +1206,7 @@ def test_constraint_enforcement_edges(spark, tmp_path):
             properties={"delta.constraints.positive": "amount > 0"},
         )
 
-    # 3) native engine format keeps invariant metadata across appends
+    # 3) a default-format table keeps invariant metadata across appends
     inv = json.dumps({"expression": {"expression": "id IS NOT NULL"}})
     nschema = ST([SF("id", L(), True, {"delta.invariants": inv})])
     tn = LakeTable.create(
@@ -1361,14 +1353,6 @@ def test_mapped_rename_drop_guards(spark, tmp_path):
     )
     with pytest.raises(NotImplementedError, match="column mapping"):
         plain.rename_column("a", "b")
-    # engine-format table: needs the Delta backend
-    native = LakeTable.create(
-        spark,
-        str(tmp_path / "native_t"),
-        df=spark.createDataFrame([Row(a=1)]),
-    )
-    with pytest.raises(NotImplementedError, match="Delta log backend"):
-        native.drop_column("a")
 
 
 def test_merge_not_matched_by_source_builder(spark, tmp_path):

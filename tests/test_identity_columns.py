@@ -35,7 +35,7 @@ def _identity_schema(allow_explicit=False, start=100, step=10):
     )
 
 
-@pytest.mark.parametrize("fmt", ["engine", "delta"])
+@pytest.mark.parametrize("fmt", ["delta"])
 def test_identity_generation_and_watermark(spark, tmp_path, fmt):
     t = LakeTable.create(
         spark,

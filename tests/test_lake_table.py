@@ -32,6 +32,32 @@ def _as_dict(df):
     return {r["id"]: (r["name"], r["balance"], r["updated"]) for r in df.collect()}
 
 
+def test_tables_are_delta_only(spark, tmp_path):
+    """With no ``format`` a table is a Delta table: it commits to
+    ``_delta_log``, an independent Delta reader sees the same rows, and
+    ``is_table`` finds it, as it does an explicit ``format="delta"``
+    table. Any other format is refused naming the contract."""
+    from databricks_delta_lake_project_spark.tables import DeltaInteropTable
+
+    df = _users(spark, [(1, "alice", 10.0, 1), (2, "bob", 20.0, 1)])
+    root = tmp_path / "default"
+    t = LakeTable.create(spark, str(root), df=df)
+    assert (root / "_delta_log").is_dir() and not (root / "_log").exists()
+    assert sorted(DeltaInteropTable(spark, str(root)).to_df().collect()) == sorted(
+        t.to_df().collect()
+    )
+    assert LakeTable.is_table(str(root))
+
+    explicit = tmp_path / "explicit"
+    LakeTable.create(spark, str(explicit), df=df, format="delta")
+    assert LakeTable.is_table(str(explicit))
+    assert not LakeTable.is_table(str(tmp_path / "absent"))
+
+    with pytest.raises(ValueError, match="Delta-only"):
+        LakeTable.create(spark, str(tmp_path / "eng"), df=df, format="engine")
+    assert not (tmp_path / "eng").exists()
+
+
 def test_create_read_append(spark, tbl):
     assert tbl.to_df().count() == 3
     tbl.append(_users(spark, [(4, "dan", 40.0, 1)]))

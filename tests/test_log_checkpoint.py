@@ -4,41 +4,64 @@ to pre-checkpoint versions still works."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import json
+from pathlib import Path
+
+import pytest
 
 from databricks_delta_lake_project_spark.tables import LakeTable
-from databricks_delta_lake_project_spark.tables import log as tlog
-import pytest
+from databricks_delta_lake_project_spark.tables.delta_interop import (
+    _last_checkpoint,
+    _replay,
+)
+from databricks_delta_lake_project_spark.tables.delta_log import (
+    CHECKPOINT_INTERVAL,
+)
+
+
+def _checkpoint_versions(root: str) -> list[int]:
+    log = Path(root) / "_delta_log"
+    return sorted(int(p.name.split(".")[0]) for p in log.glob("*.checkpoint.parquet"))
+
+
+def _raw_replay(root: str) -> dict[str, dict]:
+    """Active files folded from every JSON commit, checkpoint unused."""
+    files: dict[str, dict] = {}
+    log = Path(root) / "_delta_log"
+    for p in sorted(log.glob("*.json")):
+        for line in p.read_text().splitlines():
+            a = json.loads(line) if line.strip() else {}
+            if a.get("remove"):
+                files.pop(a["remove"]["path"], None)
+            if a.get("add"):
+                files[a["add"]["path"]] = a["add"]
+    return files
 
 
 @pytest.mark.slow
 def test_checkpoint_written_and_equivalent(spark, tmp_path):
+    assert CHECKPOINT_INTERVAL == 10
     root = str(tmp_path / "t")
     t = LakeTable.create(
         spark, root, df=spark.createDataFrame([(0, "v0")], "id long, v string")
     )
-    for i in range(1, 25):
+    for i in range(1, 15):
         t.append(spark.createDataFrame([(i, f"v{i}")], "id long, v string"))
 
-    assert t.version() == 24
-    ckpts = tlog._checkpoint_versions(root)
-    assert ckpts == [20]
+    assert t.version() == 14
+    assert _checkpoint_versions(root) == [10]
+    assert _last_checkpoint(root)["version"] == 10
 
     # fold through checkpoint == raw replay
-    via_ckpt = {e["path"] for e in tlog.active_files(root)}
-    raw: dict[str, dict] = {}
-    for c in tlog.read_log(root, use_checkpoint=False):
-        for r in c.get("remove", []):
-            raw.pop(r, None)
-        for a in c.get("add", []):
-            raw[a["path"]] = a
-    assert via_ckpt == set(raw)
-    assert t.to_df().count() == 25
+    via_ckpt = {e["path"] for e in t._files()}
+    assert via_ckpt == set(_raw_replay(root))
+    assert set(_replay(root, None).adds) == via_ckpt
+    assert t.to_df().count() == 15
 
     # time travel to a pre-checkpoint version replays from zero
     assert t.to_df(version=5).count() == 6
     # time travel landing exactly on the checkpoint version
-    assert t.to_df(version=20).count() == 21
+    assert t.to_df(version=10).count() == 11
 
 
 @pytest.mark.slow
@@ -47,16 +70,20 @@ def test_checkpoint_preserves_properties_and_schema(spark, tmp_path):
     t = LakeTable.create(
         spark, root,
         df=spark.createDataFrame([(0,)], "id long"),
-        properties={"enableChangeDataFeed": True},
+        properties={"enableChangeDataFeed": "true"},
     )
-    for i in range(1, 22):
+    for i in range(1, 12):
         t.append(spark.createDataFrame([(i,)], "id long"))
-    assert tlog._checkpoint_versions(root) == [20]
-    # properties and schema survive the checkpointed fold
-    assert t.properties() == {"enableChangeDataFeed": True}
-    assert [f.name for f in t.schema.fields] == ["id"]
+    assert _checkpoint_versions(root) == [10]
+    # properties and schema survive the checkpointed fold, also when
+    # the checkpoint is the only record of them
+    for v in range(10):
+        (Path(root) / "_delta_log" / f"{v:020d}.json").unlink()
+    fresh = LakeTable(spark, root)
+    assert fresh.properties() == {"enableChangeDataFeed": "true"}
+    assert [f.name for f in fresh.schema.fields] == ["id"]
     # CDF kept recording through checkpointed commits
-    assert t.read_changes(starting_version=21).count() == 1
+    assert fresh.read_changes(starting_version=11).count() == 1
 
 
 @pytest.mark.slow
@@ -68,30 +95,35 @@ def test_append_txn_idempotent_and_checkpointed(spark, tmp_path):
     t = LakeTable.create(
         spark, root, df=spark.createDataFrame([(0,)], "id long")
     )
-    for b in range(21):  # crosses the checkpoint at commit 20
+    for b in range(11):  # crosses the checkpoint at commit 10
         v = t.append_txn(
             spark.createDataFrame([(100 + b,)], "id long"), "streamA", b
         )
         assert v > 0
-    assert tlog._checkpoint_versions(root) == [20]
-    assert t.to_df().count() == 22
+    assert _checkpoint_versions(root) == [10]
+    assert t.to_df().count() == 12
+    # the watermark lives in the checkpoint: drop the JSON it came from
+    for v in range(11):
+        (Path(root) / "_delta_log" / f"{v:020d}.json").unlink()
+    t = LakeTable(spark, root)
+    assert t.txn_version("streamA") == 10
 
     # replays of already-landed batches are skipped (no rows, no commit)
     before = t.version()
     assert t.append_txn(
-        spark.createDataFrame([(999,)], "id long"), "streamA", 20
+        spark.createDataFrame([(999,)], "id long"), "streamA", 10
     ) == -1
     assert t.append_txn(
         spark.createDataFrame([(999,)], "id long"), "streamA", 5
     ) == -1
     assert t.version() == before
-    assert t.to_df().count() == 22
+    assert t.to_df().count() == 12
 
     # watermark is per-app: a different writer at version 5 lands fine
     assert t.append_txn(
         spark.createDataFrame([(500,)], "id long"), "streamB", 5
     ) > 0
-    assert t.txn_version("streamA") == 20
+    assert t.txn_version("streamA") == 10
     assert t.txn_version("streamB") == 5
     assert t.txn_version("absent") == -1
 
@@ -102,12 +134,13 @@ def test_delete_after_checkpoint(spark, tmp_path):
     t = LakeTable.create(
         spark, root, df=spark.createDataFrame([(0,)], "id long")
     )
-    for i in range(1, 21):
+    for i in range(1, 11):
         t.append(spark.createDataFrame([(i,)], "id long"))
+    assert _checkpoint_versions(root) == [10]
     res = t.delete("id = 3")
     assert res["numDeletedRows"] == 1
-    assert t.to_df().count() == 20
-    assert t.to_df(version=20).count() == 21  # pre-delete snapshot intact
+    assert t.to_df().count() == 10
+    assert t.to_df(version=10).count() == 11  # pre-delete snapshot intact
 
 
 @pytest.mark.slow

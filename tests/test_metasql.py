@@ -255,40 +255,36 @@ def test_show_tables_keeps_user_view_shadowing_engine_name(
         spark.catalog.dropTempView("shadowt")
 
 
-def test_engine_format_analyze_conflicts_with_schema_evolution(
+def test_analyze_conflicts_with_concurrent_schema_evolution(
     spark, tmp_path, monkeypatch
 ):
-    """Engine-log parity with the Delta backend: a property-snapshot
-    commit racing a rival SCHEMA change must conflict, not replay the
-    pre-evolution schema."""
+    """A property-snapshot commit racing a rival SCHEMA change must
+    conflict, not replay the pre-evolution schema."""
     from databricks_delta_lake_project_spark.tables.log import (
         ConcurrentModificationError,
     )
 
     t = LakeTable.create(
         spark,
-        str(tmp_path / "an_engine"),
+        str(tmp_path / "an_evolve"),
         df=spark.createDataFrame([Row(x=1)]),
-        format="engine",
     )
-    sqldml.register_table(spark, "an_engine", t)
+    sqldml.register_table(spark, "an_evolve", t)
     backend = t._log
     real_commit = backend.commit
 
     def sabotage(root, op, adds, removes, *a, **k):
         if op == "ANALYZE":
-            t2 = LakeTable(t.spark, t.root)
-            monkeypatch.setattr(backend, "commit", real_commit)
-            t2.append(
+            # a rival handle (its own backend) evolves the schema first
+            LakeTable(t.spark, t.root).append(
                 spark.createDataFrame([Row(x=2, y="new")]),
                 merge_schema=True,
             )
-            monkeypatch.setattr(backend, "commit", sabotage)
         return real_commit(root, op, adds, removes, *a, **k)
 
     monkeypatch.setattr(backend, "commit", sabotage)
     with pytest.raises(ConcurrentModificationError):
-        run_statement(spark, "ANALYZE TABLE an_engine COMPUTE STATISTICS")
+        run_statement(spark, "ANALYZE TABLE an_evolve COMPUTE STATISTICS")
     monkeypatch.setattr(backend, "commit", real_commit)
     # the rival's evolved schema survived
     assert {f.name for f in LakeTable(t.spark, t.root).schema.fields} == {

@@ -18,7 +18,7 @@ from databricks_delta_lake_project_spark.tables import LakeTable
 
 @pytest.fixture()
 def shared_world(spark, tmp_path):
-    """Provider with one share holding a native table (partition-
+    """Provider with one share holding a table (partition-
     filtered alias + plain alias) and one recipient profile."""
     table_path = str(tmp_path / "gold_revenue")
     LakeTable.create(
@@ -348,6 +348,7 @@ def test_stream_shared_table_cdf_and_rows(spark, shared_world, tmp_path):
         client.load_stream(spark, "c360_share.analytics.stream_gold")
     provider.grant("c360_share", "partner_team")
 
-    # engine-format (no _delta_log) tables refuse streaming loudly
-    with pytest.raises(ValueError, match="Delta-backed"):
-        client.load_stream(spark, "c360_share.analytics.revenue")
+    # a shared path that holds no _delta_log refuses streaming loudly
+    provider.add_table("c360_share", str(tmp_path / "gone"), "analytics.gone")
+    with pytest.raises(ValueError, match="requires a Delta table"):
+        client.load_stream(spark, "c360_share.analytics.gone")

@@ -721,10 +721,10 @@ def test_create_table_generated_comparison_and_comment_literal(spark, tmp_path):
     assert got == {(3, True), (9, False)}
 
 
-@pytest.mark.parametrize("fmt", ["engine", "delta"])
+@pytest.mark.parametrize("fmt", ["delta"])
 def test_alter_add_columns_sql(spark, tmp_path, fmt):
     """ALTER TABLE ADD COLUMNS (delta_lake_features.py:258-262):
-    metadata-only additive evolution on both backends — old rows
+    metadata-only additive evolution — old rows
     null-fill, new appends carry the column."""
     from pyspark.sql import Row
 
@@ -788,12 +788,11 @@ def test_alter_column_comment_and_tags_sql(spark, tmp_path):
     assert LakeTable(t.spark, t.root).tags() == {"team": "data-eng"}
 
 
-@pytest.mark.parametrize("fmt", ["engine", "delta"])
+@pytest.mark.parametrize("fmt", ["delta"])
 def test_unset_tags_both_backends(spark, tmp_path, fmt):
-    """UNSET TAGS must actually delete on BOTH backends — the engine
-    log merges per-commit property dicts on replay (deletion is a None
-    tombstone), delta replaces wholesale (incl. unsetting the LAST
-    property, which still must emit metaData)."""
+    """UNSET TAGS must actually delete: the metaData configuration is
+    replaced wholesale (incl. unsetting the LAST property, which still
+    must emit metaData)."""
     from pyspark.sql import Row
 
     t = LakeTable.create(
