@@ -248,13 +248,14 @@ class SharingClient:
         self, spark: SparkSession, url: str, starting_version: int = 0
     ) -> DataFrame:
         """Change-data-feed read of a shared table
-        (``delta_sharing_recipient.py:180-205``). Native tables read
-        their materialized change files; external Delta tables —
-        including read-only interop shapes (partitioned, column-mapped)
-        — synthesize insert rows from the ``_delta_log`` replay while
-        append-only (``LakeTable.read_changes`` /
-        ``DeltaInteropTable.read_changes``) — only a foreign rewrite
-        commit (row-level deltas unrecoverable) is refused."""
+        (``delta_sharing_recipient.py:180-205``). Every version is
+        served from its own commit (``LakeTable.read_changes``, or
+        ``DeltaInteropTable.read_changes`` for the read-only interop
+        shapes ``LakeTable.for_path`` falls back to): its
+        ``cdc`` files when the writer had CDF on, else its add files
+        as insert rows — so append-only external Delta tables read
+        too; only a rewrite commit without cdc actions (row-level
+        deltas unrecoverable) is refused."""
         entry = self._resolve(url)
         t = LakeTable.for_path(spark, entry["path"])
         df = t.read_changes(starting_version=starting_version)

@@ -8,15 +8,15 @@ Python Data Source API — the OSS stand-in for
 Offsets ARE table versions: a micro-batch covers the half-open commit
 range [start.version, end.version), so restart/replay semantics come
 from the checkpoint for free and each commit is delivered exactly
-once. Per the CDF protocol a version with ``cdc`` actions serves its
-changes exclusively from those ``_change_data`` files; append-only
-versions synthesize ``insert`` rows from their add files; a rewrite
-commit without cdc actions fails the stream loudly (row-level deltas
-are not reconstructible) rather than emitting wrong changes.
+once. A version's change files are planned by
+``delta_interop.change_files``, as in ``LakeTable.read_changes``; a
+rewrite commit without cdc actions fails the stream loudly rather than
+emitting wrong changes.
 
 Scale shape: ``partitions()`` plans one input partition per change
-file (driver cost O(files in the version range), the same as any file
-source), and ``read()`` runs executor-side via pyarrow with no
+file, with schema and partition columns from the checkpoint-aware
+snapshot cache (``delta_interop._replay``): driver cost O(new commits
++ their files). ``read()`` runs executor-side via pyarrow with no
 driver data movement. On a real cluster the package ships to workers
 like any other Python dependency (py-files / wheel); local mode shares
 PYTHONPATH.
@@ -52,31 +52,17 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from ..tables.delta_interop import (
+    _commit_versions,
+    _replay,
+    change_files,
+    physical_name_map,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
-
-_LOG_DIR = "_delta_log"
-
-
-def _commit_versions(root: str) -> list[int]:
-    log = Path(root) / _LOG_DIR
-    if not log.is_dir():
-        raise ValueError(f"not a Delta table (no {_LOG_DIR}): {root}")
-    return sorted(
-        int(p.stem) for p in log.glob("*.json") if p.stem.isdigit()
-    )
-
-
-def _read_commit_actions(root: str, v: int) -> list[dict[str, Any]]:
-    out = []
-    with open(Path(root) / _LOG_DIR / f"{v:020d}.json") as fh:
-        for line in fh:
-            line = line.strip()
-            if line:
-                out.append(json.loads(line))
-    return out
 
 
 class CdfFilePartition(InputPartition):
@@ -130,39 +116,16 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
 
     # -- planning (driver) -------------------------------------------------
 
-    def _table_state(self, up_to: int) -> tuple[StructType, list[str], str]:
-        """(schema, partition columns, mapping mode) as of ``up_to``
-        (inclusive), by folding metaData actions — self-contained so
-        the reader needs no engine table handle."""
-        schema_json, pcols, mode = None, [], "none"
-        for v in _commit_versions(self.root):
-            if v > up_to:
-                break
-            for a in _read_commit_actions(self.root, v):
-                md = a.get("metaData")
-                if md:
-                    schema_json = md["schemaString"]
-                    pcols = list(md.get("partitionColumns") or [])
-                    mode = dict(md.get("configuration") or {}).get(
-                        "delta.columnMapping.mode", "none"
-                    )
-        if schema_json is None:
-            raise ValueError(f"no metaData action in {self.root}")
-        return StructType.fromJson(json.loads(schema_json)), pcols, mode
-
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         lo, hi = int(start["version"]), int(end["version"])
-        parts: list[InputPartition] = []
         versions = [v for v in _commit_versions(self.root) if lo <= v < hi]
         if not versions:
             return []
-        schema, pcols, mode = self._table_state(versions[-1])
-        phys_key = "delta.columnMapping.physicalName"
-        logical = [f.name for f in schema.fields]
-        physical = [
-            f.metadata.get(phys_key, f.name) if mode != "none" else f.name
-            for f in schema.fields
-        ]
+        state = _replay(self.root, versions[-1])
+        schema = StructType.fromJson(json.loads(state.schema_json))
+        phys_by_logical = physical_name_map(schema)
+        logical, physical = list(phys_by_logical), list(phys_by_logical.values())
+        phys_pcols = [phys_by_logical[c] for c in state.partition_columns]
         # exact arrow types per column, computed ONCE at planning so
         # read() types null-fills and partition values correctly for
         # every Spark type (decimal, binary, nested, ...)
@@ -175,33 +138,10 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
                 arrow_types[f.name] = to_arrow_type(f.dataType)
             except Exception:
                 arrow_types[f.name] = pa.string()
-        phys_by_logical = dict(zip(logical, physical))
-        phys_pcols = [phys_by_logical[c] for c in pcols]
 
+        parts: list[InputPartition] = []
         for v in versions:
-            acts = _read_commit_actions(self.root, v)
-            cdcs = [a["cdc"] for a in acts if a.get("cdc")]
-            adds = [
-                a["add"]
-                for a in acts
-                if a.get("add") and a["add"].get("dataChange", True)
-            ]
-            removed = any(
-                a.get("remove", {}).get("dataChange", True)
-                for a in acts
-                if a.get("remove")
-            )
-            dv = any(a.get("deletionVector") for a in adds)
-            if cdcs:
-                chosen, ctype = cdcs, None
-            elif removed or dv:
-                raise ValueError(
-                    f"CDF stream at version {v}: commit rewrote files "
-                    "without cdc actions (change data feed was off at "
-                    "write time); refusing to emit wrong changes"
-                )
-            else:
-                chosen, ctype = adds, "insert"
+            chosen, ctype = change_files(self.root, v)
             for e in chosen:
                 parts.append(
                     CdfFilePartition(
@@ -283,23 +223,14 @@ class DeltaCdfStreamDataSource(DataSource):
         return "delta_cdf_stream"
 
     def schema(self) -> StructType:
-        root = self.options["path"]
-        schema_json = None
-        for v in _commit_versions(root):
-            for a in _read_commit_actions(root, v):
-                if a.get("metaData"):
-                    schema_json = a["metaData"]["schemaString"]
-        if schema_json is None:
-            raise ValueError(f"no metaData action in {root}")
-        base = StructType.fromJson(json.loads(schema_json))
+        state = _replay(self.options["path"], None)
+        base = StructType.fromJson(json.loads(state.schema_json))
         # strip field metadata (mapping ids etc.) from the OUTPUT
         # schema; read() already resolves physical names
         fields = [
             StructField(f.name, f.dataType, True) for f in base.fields
         ]
         fields.append(StructField("_change_type", StringType(), True))
-        from pyspark.sql.types import LongType
-
         fields.append(StructField("_commit_version", LongType(), True))
         return StructType(fields)
 

@@ -711,14 +711,16 @@ def _file_identity(p: Path) -> tuple[str, int, int, int]:
     return (p.name, st.st_size, st.st_mtime_ns, st.st_ino)
 
 
+def _commit_actions(root: str, version: int) -> list[dict[str, Any]]:
+    """The actions of one JSON commit, in log order."""
+    with open(Path(root) / DELTA_LOG_DIR / f"{version:020d}.json") as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
 def _apply_commits(root: str, state: _State, first: int, last: int) -> None:
-    log = Path(root) / DELTA_LOG_DIR
     for v in range(first, last + 1):
-        with open(log / f"{v:020d}.json") as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    state.apply(json.loads(line))
+        for action in _commit_actions(root, v):
+            state.apply(action)
 
 
 def _replay(root: str, version: int | None) -> _State:
@@ -789,6 +791,35 @@ def _replay(root: str, version: int | None) -> _State:
             while len(_snapshots) > _SNAPSHOT_CACHE_ROOTS:
                 _snapshots.popitem(last=False)
     return state
+
+
+def change_files(
+    root: str, version: int
+) -> tuple[list[dict[str, Any]], str | None]:
+    """The files that carry ``version``'s change data feed, as the
+    Delta CDF protocol places them in its commit, and the
+    ``_change_type`` their rows take (None: the files carry their own):
+    the commit's ``cdc`` files when it has any, else its ``add`` actions
+    with ``dataChange`` set, as ``insert``. A commit that removed data
+    or attached a deletion vector without ``cdc`` actions has no
+    row-level delta in the log: it is refused, naming the version."""
+    cdcs, adds, removed = [], [], False
+    for a in _commit_actions(root, version):
+        if a.get("cdc") is not None:
+            cdcs.append(a["cdc"])
+        elif a.get("add") is not None and a["add"].get("dataChange", True):
+            adds.append(a["add"])
+        elif a.get("remove") is not None and a["remove"].get("dataChange", True):
+            removed = True
+    if cdcs:
+        return cdcs, None
+    if removed or any(e.get("deletionVector") for e in adds):
+        raise NotImplementedError(
+            f"CDF for version {version}: the commit rewrote files "
+            "without cdc actions (change data feed was off at write "
+            "time); its row-level changes are not in the _delta_log"
+        )
+    return adds, "insert"
 
 
 class DeltaInteropTable:

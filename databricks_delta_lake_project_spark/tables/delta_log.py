@@ -70,7 +70,6 @@ from .delta_interop import (
 from .log import publish_new
 
 DATA_DIR = "data"
-CHANGES_DIR = "_changes"
 LOG_DIR = di.DELTA_LOG_DIR
 
 CHECKPOINT_INTERVAL = 10
@@ -261,7 +260,6 @@ class DeltaLogBackend:
     def ensure_layout(self, root: str) -> None:
         (Path(root) / LOG_DIR).mkdir(parents=True, exist_ok=True)
         (Path(root) / DATA_DIR).mkdir(parents=True, exist_ok=True)
-        (Path(root) / CHANGES_DIR).mkdir(parents=True, exist_ok=True)
 
     def data_dir(self, root: str) -> Path:
         return Path(root) / DATA_DIR

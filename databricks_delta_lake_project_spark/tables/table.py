@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from .delta_log import CHANGES_DIR, DATA_DIR, DeltaLogBackend
+from .delta_log import DATA_DIR, DeltaLogBackend
 
 _STATS_TYPES = (
     "int",
@@ -292,9 +292,6 @@ class LakeTable:
                 properties=properties or {},
                 partition_columns=partition_by,
             )
-            t = cls(spark, root)
-            t._write_cdf(df, "insert", log.latest_version(root))
-            return t
         return cls(spark, root)
 
     @classmethod
@@ -445,6 +442,7 @@ class LakeTable:
         entries: list[dict[str, Any]],
         version: int | None = None,
         with_row_index: bool = False,
+        cdc: bool = False,
     ) -> DataFrame:
         """Scan a file set under the table schema. Entries carrying a
         ``deletionVector`` descriptor have their marked row indices
@@ -452,9 +450,13 @@ class LakeTable:
         caller (snapshot reads, touched-file probes, copy-on-write
         rewrites) therefore sees only ALIVE rows. ``with_row_index``
         additionally exposes ``__file``/``__pos`` metadata columns (the
-        DV delete path needs physical positions)."""
+        DV delete path needs physical positions). ``cdc`` scans change
+        data files, which carry ``_change_type`` after the table
+        columns."""
         schema_json = self._log.schema_at(self.root, version)
         schema = StructType.fromJson(json.loads(schema_json))
+        if cdc:
+            schema = schema.add(CDF_TYPE_COL, "string")
         if not entries:
             df = self.spark.createDataFrame([], schema)
             if with_row_index:
@@ -923,7 +925,6 @@ class LakeTable:
             for e in adds:
                 (Path(self.root) / e["path"]).unlink(missing_ok=True)
             raise
-        self._write_cdf(self._read_files(adds), "insert", v)
         return v
 
     def txn_version(self, app_id: str) -> int:
@@ -990,7 +991,6 @@ class LakeTable:
             for e in adds:
                 (Path(self.root) / e["path"]).unlink(missing_ok=True)
             raise
-        self._write_cdf(self._read_files(adds), "insert", v)
         return v
 
     def _identity_hwm_schema(
@@ -1233,9 +1233,9 @@ class LakeTable:
         cdf_on = self._cdf_enabled()
         persisted = False
         if touched and cdf_on:
-            # CDF needs the deleted rows as a frame (change staging +
-            # _changes tail) — keep the touched scan warm across its
-            # three consumers
+            # CDF stages the deleted rows as change data: keep the
+            # touched scan warm across its three consumers (the
+            # deleted count, the kept-rows write and the cdc write)
             tdf = self._read_files(touched).persist()
             persisted = True
             kept = tdf.filter(~cond | cond.isNull())
@@ -1293,7 +1293,7 @@ class LakeTable:
             if changes is not None
             else []
         )
-        v = self._commit_cleanup(
+        self._commit_cleanup(
             adds + cdc,
             self.root, "DELETE", adds,
             [e["path"] for e in touched] + sorted(whole_paths),
@@ -1301,8 +1301,6 @@ class LakeTable:
             expected_version=snap,
             **({"cdc": cdc} if cdc else {}),
         )
-        if changes is not None:
-            self._write_cdf(changes, "delete", v)
         if persisted:
             tdf.unpersist()
         return metrics
@@ -1370,7 +1368,7 @@ class LakeTable:
             if changes is not None
             else []
         )
-        v = self._commit_cleanup(
+        self._commit_cleanup(
             # DV re-adds point at EXISTING live files — only the fresh
             # sidecars and cdc parquet were staged by this pass
             staged_dv + cdc,
@@ -1382,8 +1380,6 @@ class LakeTable:
             expected_version=snap,
             **({"cdc": cdc} if cdc else {}),
         )
-        if changes is not None:
-            self._write_cdf(changes, "delete", v)
         if tdf is not None:
             tdf.unpersist()
         return metrics
@@ -1550,7 +1546,7 @@ class LakeTable:
         cdc = self._stage_cdc(
             [("update_preimage", pre), ("update_postimage", post)]
         )
-        v = self._commit_cleanup(
+        self._commit_cleanup(
             # DV re-adds point at EXISTING live files — staged files
             # are the fresh sidecars, the post-image adds, and the cdc
             staged_dv + adds_new + cdc,
@@ -1561,9 +1557,6 @@ class LakeTable:
             expected_version=snap,
             **({"cdc": cdc} if cdc else {}),
         )
-        if self._cdf_enabled():
-            self._write_cdf(pre, "update_preimage", v)
-            self._write_cdf(post, "update_postimage", v)
         tdf.unpersist()
         return metrics
 
@@ -1652,16 +1645,13 @@ class LakeTable:
         cdc = self._stage_cdc(
             [("update_preimage", pre), ("update_postimage", post)]
         )
-        v = self._commit_cleanup(
+        self._commit_cleanup(
             adds + cdc,
             self.root, "UPDATE", adds, [e["path"] for e in touched],
             self._log.schema_at(self.root), metrics=metrics,
             expected_version=snap,
             **({"cdc": cdc} if cdc else {}),
         )
-        if cdf_on:
-            self._write_cdf(pre, "update_preimage", v)
-            self._write_cdf(post, "update_postimage", v)
         if reuse:
             tdf.unpersist()
         return metrics
@@ -2075,7 +2065,7 @@ class LakeTable:
             # explicit identity values must advance the highWaterMark
             # (against the snapshot schema, like append)
             hwm_json = self._identity_hwm_schema(adds, schema=table_schema)
-            v = self._commit_cleanup(
+            self._commit_cleanup(
                 adds + cdc,
                 self.root,
                 "WRITE",
@@ -2088,10 +2078,6 @@ class LakeTable:
                 schema_authoritative=hwm_json is not None,
                 **({"cdc": cdc} if cdc else {}),
             )
-            if cdf_on:
-                self._write_cdf(new_df, "insert", v)
-                if removed is not None:
-                    self._write_cdf(removed, "delete", v)
             return metrics
         finally:
             new_df.unpersist()
@@ -2263,15 +2249,13 @@ class LakeTable:
             else []
         )
         metrics = {"numRemovedFiles": len(files), "numDeletedRows": n}
-        v = self._commit_cleanup(
+        self._commit_cleanup(
             cdc,
             self.root, "TRUNCATE", [], [e["path"] for e in files],
             self._log.schema_at(self.root), metrics=metrics,
             expected_version=snap,
             **({"cdc": cdc} if cdc else {}),
         )
-        if changes is not None:
-            self._write_cdf(changes, "delete", v)
         return metrics
 
     def rename_column(self, old: str, new: str) -> int:
@@ -2850,22 +2834,10 @@ class LakeTable:
         self, whole: list[dict[str, Any]], cdf_on: bool
     ) -> DataFrame | None:
         """CDF change frame for whole-file removals, or None when CDF
-        is off: its only consumers (``_stage_cdc``, ``_write_cdf``)
-        no-op then, and building the frame anyway costs a
-        partition-listing/scan job whose output nothing reads."""
+        is off: its only consumer (``_stage_cdc``) no-ops then, and
+        building the frame anyway costs a partition-listing/scan job
+        whose output nothing reads."""
         return self._read_files(whole) if (whole and cdf_on) else None
-
-    def _write_cdf(self, df: DataFrame, change_type: str, version: int) -> None:
-        if not self._cdf_enabled():
-            return
-        out = (
-            Path(self.root)
-            / CHANGES_DIR
-            / f"{CDF_VERSION_COL}={version}"
-        )
-        df.withColumn(CDF_TYPE_COL, F.lit(change_type)).write.mode(
-            "append"
-        ).parquet(str(out))
 
     def _stage_cdc(
         self, frames: list[tuple[str, DataFrame]]
@@ -2874,30 +2846,46 @@ class LakeTable:
         on a CDF-enabled table: the (change_type, frame)
         pairs union into ``_change_data`` parquet (physical column
         names on mapped tables, hive dirs on partitioned ones) and the
-        returned ``cdc`` actions ride in the SAME commit — which is
-        what makes the table's UPDATE/DELETE/MERGE history readable by
-        any external Delta CDF reader, not only this engine. The
-        ``_changes/`` dir is still written post-commit as the
-        streaming-CDF tail; the duplication is bounded by changed rows
-        and only paid when CDF is enabled."""
+        returned ``cdc`` actions ride in the SAME commit. They are the
+        only copy of the commit's row-level changes: ``read_changes``,
+        the ``delta_cdf_stream`` source and any external Delta CDF
+        reader serve UPDATE/DELETE/MERGE history from them, so the
+        change set lands whole with the commit or not at all."""
         if not self._cdf_enabled():
             return []
-        union: DataFrame | None = None
-        for change_type, df in frames:
-            part = self._prep_write(
-                df, enforce=False, regenerate=False
-            ).withColumn("_change_type", F.lit(change_type))
-            union = part if union is None else union.unionByName(part)
-        if union is None:
-            return []
+        union = functools.reduce(
+            DataFrame.unionByName,
+            [
+                self._prep_write(df, enforce=False, regenerate=False)
+                .withColumn("_change_type", F.lit(change_type))
+                for change_type, df in frames
+            ],
+        )
+        pcols = self._write_partition_columns() or []
         adds, n = _write_files(
-            union,
-            self.root,
-            partition_columns=self._write_partition_columns(),
-            subdir="_change_data",
+            union, self.root, partition_columns=pcols, subdir="_change_data"
         )
         if n == 0:
-            return []
+            # an empty change set (a MERGE whose matched clauses all
+            # declined) still gets one empty cdc file: a commit that
+            # rewrote files without any cdc action has no readable
+            # change set at all. Partition columns stay out of the
+            # file, as in any partitioned file, and take null values.
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            rel = f"_change_data/part-{uuid.uuid4().hex}.parquet"
+            data = StructType(
+                [f for f in union.schema.fields if f.name not in pcols]
+            )
+            dest = Path(self.root) / rel
+            pq.write_table(to_arrow_schema(data).empty_table(), dest)
+            adds = [
+                {
+                    "path": rel,
+                    "bytes": dest.stat().st_size,
+                    "partitionValues": dict.fromkeys(pcols),
+                }
+            ]
         return adds
 
     def read_changes(
@@ -2906,78 +2894,31 @@ class LakeTable:
         """Batch CDF scan (``delta_lake_features.py:357-368``). Columns:
         table schema + _change_type + _commit_version.
 
-        Engine-written commits read their materialized change files
-        (``_changes/``). Versions with no change files — commits
-        landed by OTHER Delta writers — serve
-        the commit's ``cdc`` actions when present (the
-        ``_change_data`` files a CDF-enabled Delta writer materializes
-        for UPDATE/DELETE/MERGE, holding rows + ``_change_type``), else
-        are synthesized from the ``_delta_log`` replay when they are
-        append-only (the add files ARE the inserted rows); a foreign
-        commit that removed files WITHOUT cdc actions has no
-        reconstructible row-level delta, so it is refused loudly
-        instead of returning wrong changes (reference surface:
+        Each version is served from its own commit by the planner the
+        ``delta_cdf_stream`` source uses too
+        (``delta_interop.change_files``): its ``cdc`` files, else its
+        data-changing add files as ``insert`` rows; ``dataChange=false``
+        commits (OPTIMIZE, REORG) contribute nothing. A commit that
+        rewrote files without cdc actions (CDF off at write time) is
+        refused loudly, naming the version, instead of returning wrong
+        changes (reference surface:
         ``delta_sharing_recipient.py:180-205``)."""
-        base = Path(self.root) / CHANGES_DIR
-        have: dict[int, str] = {}
-        if base.is_dir():
-            for d in base.iterdir():
-                if d.name.startswith(f"{CDF_VERSION_COL}="):
-                    have[int(d.name.split("=")[1])] = str(d)
-
-        def _in_range(v: int) -> bool:
-            return v >= starting_version and (
-                ending_version is None or v <= ending_version
-            )
+        from .delta_interop import change_files
 
         frames = []
-        picked = [p for v, p in sorted(have.items()) if _in_range(v)]
-        if picked:
-            frames.append(
-                self.spark.read.option("basePath", str(base)).parquet(*picked)
-            )
         for v in self._log.list_versions(self.root):
-            if not _in_range(v) or v in have:
+            if v < starting_version or (
+                ending_version is not None and v > ending_version
+            ):
                 continue
-            c = self._log.read_commit(self.root, v)
-            if c.get("operation") in ("OPTIMIZE", "REORG"):
-                continue  # dataChange=false: no logical change
-            if c.get("cdc"):
-                # protocol CDF: this version's changes come
-                # EXCLUSIVELY from its _change_data files
-                from pyspark.sql.types import StringType, StructField
-
-                from .delta_interop import DeltaInteropTable, _replay
-
-                state = _replay(self.root, v)
-                schema_v = StructType.fromJson(
-                    json.loads(state.schema_json)
-                )
-                cdc_schema = StructType(
-                    list(schema_v.fields)
-                    + [StructField(CDF_TYPE_COL, StringType())]
-                )
-                it = DeltaInteropTable(self.spark, self.root)
-                frames.append(
-                    it._scan(state, cdc_schema, c["cdc"]).withColumn(
-                        CDF_VERSION_COL, F.lit(v).cast("long")
-                    )
-                )
+            entries, change_type = change_files(self.root, v)
+            if not entries:
                 continue
-            if c.get("remove"):
-                raise NotImplementedError(
-                    f"CDF for version {v}: commit "
-                    f"({c.get('operation')}) rewrote files outside "
-                    "this engine without cdc actions; row-level "
-                    "changes are not reconstructible from the "
-                    "_delta_log alone"
-                )
-            if not c.get("add"):
-                continue
+            df = self._read_files(entries, version=v, cdc=change_type is None)
+            if change_type is not None:
+                df = df.withColumn(CDF_TYPE_COL, F.lit(change_type))
             frames.append(
-                self._read_files(c["add"], version=v)
-                .withColumn(CDF_TYPE_COL, F.lit("insert"))
-                .withColumn(CDF_VERSION_COL, F.lit(v).cast("long"))
+                df.withColumn(CDF_VERSION_COL, F.lit(v).cast("long"))
             )
         if not frames:
             schema = self.schema.add(CDF_TYPE_COL, "string").add(
@@ -2989,29 +2930,25 @@ class LakeTable:
             out = out.unionByName(f, allowMissingColumns=True)
         return out
 
-    def changes_dir(self) -> str:
-        """Append-only CDF directory — usable directly as a Structured
-        Streaming file source for downstream incremental pipelines."""
-        return str(Path(self.root) / CHANGES_DIR)
-
     def read_changes_stream(self) -> DataFrame:
         """Streaming CDF scan (S4-equivalent: the OSS
-        ``readStream.option("readChangeFeed", ...)`` role): tail this
-        table's change feed as a Structured Streaming source. Each
-        downstream checkpoint tracks its own offset into the feed."""
+        ``readStream.option("readChangeFeed", ...)`` role): this
+        table's change feed through the ``delta_cdf_stream`` source,
+        served from the same commits as :meth:`read_changes`. Offsets
+        are table versions, so each downstream checkpoint delivers
+        every commit's changes exactly once."""
         if not self._cdf_enabled():
             raise ValueError(
                 "change data feed not enabled; create the table with "
                 "properties={'enableChangeDataFeed': True}"
             )
-        schema = self.schema.add(CDF_TYPE_COL, "string").add(
-            CDF_VERSION_COL, "long"
-        )
-        base = self.changes_dir()
+        from ..sources.cdf_stream import register_cdf_stream
+
+        register_cdf_stream(self.spark)
         return (
-            self.spark.readStream.schema(schema)
-            .option("basePath", base)
-            .parquet(base + "/*")
+            self.spark.readStream.format("delta_cdf_stream")
+            .option("path", self.root)
+            .load()
         )
 
     # -- internals ---------------------------------------------------------
@@ -3873,15 +3810,15 @@ class MergeBuilder:
         # key-bounds aggregate, no touched-file probe, and no
         # full-outer join against a provably empty side (the bootstrap
         # micro-batch of every foreachBatch-MERGE stream takes this
-        # path). Guarded to the clean rewrite shape: DV mode, CDF
-        # staging, and (invalid per the MERGE spec, but analyzable on
-        # the join path) ``t.``-references inside NOT MATCHED clauses
-        # all fall through to the general plan.
+        # path). Its commit only adds files, which a CDF reader serves
+        # as inserts. Guarded to the clean rewrite shape: DV mode and
+        # (invalid per the MERGE spec, but analyzable on the join path)
+        # ``t.``-references inside NOT MATCHED clauses fall through to
+        # the general plan.
         if (
             not files
             and not dv_mode
             and not self._by_source
-            and not t._cdf_enabled()
             and not any(
                 (c is not None and re.search(r"\bt\s*\.", c))
                 or any(
@@ -4211,7 +4148,7 @@ class MergeBuilder:
             work_schema.json() if new_cols else t._log.schema_at(t.root)
         )
         try:
-            v = t._log.commit(
+            t._log.commit(
                 t.root, "MERGE", adds_all, removes_all,
                 schema_json,
                 parameters={"predicate": self.condition},
@@ -4227,11 +4164,6 @@ class MergeBuilder:
             for e in fresh_adds + cdc:
                 (Path(t.root) / e["path"]).unlink(missing_ok=True)
             raise
-        if cdf_on:
-            t._write_cdf(pre, "update_preimage", v)
-            t._write_cdf(post, "update_postimage", v)
-            t._write_cdf(dele, "delete", v)
-            t._write_cdf(ins, "insert", v)
         if self._persisted is not None:
             joined.unpersist()
             self._persisted = None

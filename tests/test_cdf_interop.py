@@ -291,8 +291,8 @@ def test_engine_dml_writes_protocol_cdc(spark, tmp_path):
         (3, "C!", "update_postimage", 3),
         (4, "d", "insert", 3),
     }
-    # engine's own reader agrees (reads the _changes/ tail for its own
-    # commits)
+    # engine's own reader agrees (serves the same cdc actions through
+    # the shared change-file planner)
     own = {
         (r["id"], r["val"], r["_change_type"], r["_commit_version"])
         for r in t.read_changes(0).collect()

@@ -63,8 +63,8 @@ def test_customer360_rerun_is_stable(spark, tmp_path):
 
 
 def test_cdf_feeds_incremental_consumer(spark, tmp_path):
-    """A CDF-enabled table's change directory is a valid streaming
-    source for downstream incremental pipelines (S4-equivalent)."""
+    """A CDF-enabled table's change feed is a valid streaming source
+    for downstream incremental pipelines (S4-equivalent)."""
     t = LakeTable.create(
         spark, str(tmp_path / "t"),
         df=spark.createDataFrame([(1, "a")], "id long, v string"),
