@@ -22,8 +22,8 @@ against the registry the provider wrote — the same trust boundary as
 the reference's workspace-level sharing (the provider's storage
 credentials ARE the hard boundary; the registry records intent and
 scoping). Shared tables resolve through ``LakeTable.for_path``, so
-both native tables and external ``_delta_log`` tables
-(``tables/delta_interop.py``) are shareable, read-only.
+every Delta table — engine-written or external, including ones the
+engine may not write — is shareable, read-only.
 
 Scale notes: listing and auth are O(registry) driver-side JSON; data
 reads are ordinary engine scans — partition filters land on the scan
@@ -249,13 +249,11 @@ class SharingClient:
     ) -> DataFrame:
         """Change-data-feed read of a shared table
         (``delta_sharing_recipient.py:180-205``). Every version is
-        served from its own commit (``LakeTable.read_changes``, or
-        ``DeltaInteropTable.read_changes`` for the read-only interop
-        shapes ``LakeTable.for_path`` falls back to): its
+        served from its own commit (``LakeTable.read_changes``): its
         ``cdc`` files when the writer had CDF on, else its add files
         as insert rows — so append-only external Delta tables read
-        too; only a rewrite commit without cdc actions (row-level
-        deltas unrecoverable) is refused."""
+        too; a rewrite commit without cdc actions (row-level deltas
+        unrecoverable) or a vacuumed starting version is refused."""
         entry = self._resolve(url)
         t = LakeTable.for_path(spark, entry["path"])
         df = t.read_changes(starting_version=starting_version)

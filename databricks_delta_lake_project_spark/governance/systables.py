@@ -198,14 +198,10 @@ _IS_COLUMNS_SCHEMA = (
 
 
 def _table_kind(spark: SparkSession, t) -> tuple[str, str]:
-    """``(table_type, data_source_format)`` for one registered handle.
-    Read-only interop handles (foreign ``_delta_log`` the engine may
-    not write) have no ``_log`` backend and are EXTERNAL; engine
-    tables report MANAGED when they live under the warehouse dir
-    (where metasql's managed CREATE lands them), EXTERNAL otherwise.
-    Every table is DELTA."""
-    if getattr(t, "_log", None) is None:
-        return "EXTERNAL", "DELTA"
+    """``(table_type, data_source_format)`` for one registered handle:
+    MANAGED when the table lives under the warehouse dir (where
+    metasql's managed CREATE lands it), EXTERNAL otherwise. Every
+    table is DELTA."""
     try:
         wh = spark.conf.get("spark.sql.warehouse.dir") or ""
     except Exception:  # noqa: BLE001

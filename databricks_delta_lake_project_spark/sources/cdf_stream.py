@@ -10,8 +10,9 @@ range [start.version, end.version), so restart/replay semantics come
 from the checkpoint for free and each commit is delivered exactly
 once. A version's change files are planned by
 ``delta_interop.change_files``, as in ``LakeTable.read_changes``; a
-rewrite commit without cdc actions fails the stream loudly rather than
-emitting wrong changes.
+rewrite commit without cdc actions, or a starting version whose
+commits are no longer in the log, fails the stream loudly rather than
+emitting wrong or partial changes.
 
 Scale shape: ``partitions()`` plans one input partition per change
 file, with schema and partition columns from the checkpoint-aware
@@ -58,6 +59,7 @@ from ..tables.delta_interop import (
     _commit_versions,
     _replay,
     change_files,
+    change_versions,
     physical_name_map,
 )
 
@@ -118,7 +120,10 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         lo, hi = int(start["version"]), int(end["version"])
-        versions = [v for v in _commit_versions(self.root) if lo <= v < hi]
+        if hi <= lo:
+            return []
+        # refuses a start below the oldest commit left in the log
+        versions = change_versions(self.root, lo, hi - 1)
         if not versions:
             return []
         state = _replay(self.root, versions[-1])

@@ -1,2 +1,2 @@
-from .delta_interop import DeltaInteropTable, is_delta_table  # noqa: F401
+from .delta_interop import is_delta_table  # noqa: F401
 from .table import LakeTable  # noqa: F401

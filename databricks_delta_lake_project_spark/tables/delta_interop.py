@@ -1,13 +1,15 @@
-"""Read-only interop with the open Delta Lake table format.
+"""The open Delta Lake protocol, read side: log replay and codecs.
 
 Every persistent table in the reference is stored as Delta
 (``/root/reference/config/pipeline_config.py:32-60``,
 ``src/utils/delta_lake_features.py:37-41``), and so is every
-``LakeTable`` the engine writes. This module opens any Delta table
-without ``delta-spark``: it replays the public ``_delta_log`` protocol
-(JSON commits + parquet checkpoints, as specified in the open Delta
-protocol) into an active file set and hands the files to a plain
-parquet scan.
+``LakeTable`` the engine writes. This module holds what the engine
+needs to understand a ``_delta_log`` without ``delta-spark``, and runs
+no Spark job: the replay of JSON commits and parquet checkpoints into
+table state, the snapshot cache in front of it, the deletion-vector
+codec, the change-file planner of the change data feed, and the
+schema helpers for column mapping. ``LakeTable`` scans the files a
+state names.
 
 Scale notes:
 * Log replay is driver-side but O(|log since checkpoint|) — the same
@@ -17,9 +19,6 @@ Scale notes:
 * A process-wide snapshot cache (``_replay``) keeps the newest state
   read per table root and advances it by the new JSON commits only, so
   a warm read or write costs a listing and a few ``stat`` calls.
-* Partitioned tables use Delta's hive-style data paths, so the scan
-  recovers partition columns via ``basePath`` — one multi-file scan,
-  no per-partition unions, and partition pruning still works.
 * Deletion vectors, column mapping (incl. partitioned+mapped), V2
   checkpoints, and timestampNtz are implemented; anything ELSE a
   protocol action advertises is refused loudly rather than returning
@@ -36,15 +35,12 @@ from pathlib import Path
 from typing import Any, NamedTuple
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
 DELTA_LOG_DIR = "_delta_log"
 
-# Reader features this scan implements. Anything else advertised by a
-# protocol action with minReaderVersion >= 3 is refused.
+# Reader features the engine's scan implements. Anything else advertised
+# by a protocol action with minReaderVersion >= 3 is refused.
 _SUPPORTED_READER_FEATURES = {
     "timestampNtz",
     "v2Checkpoint",
@@ -61,7 +57,7 @@ _SUPPORTED_READER_FEATURES = {
 # data file as deleted. The bitmap is a RoaringBitmapArray (64-bit values
 # split into a 32-bit bitmap index + a standard 32-bit roaring bitmap),
 # stored inline (z85) or in a `deletion_vector_<uuid>.bin` sidecar file.
-# The scan applies them as: read the marked files with
+# ``LakeTable`` applies them as: read the marked files with
 # `_metadata.row_index`, anti-join the deleted (file, index) pairs.
 # ---------------------------------------------------------------------------
 
@@ -732,6 +728,11 @@ def _replay(root: str, version: int | None) -> _State:
     checkpoint and each JSON commit once per new version. The returned
     state is shared with the cache and with other callers — treat it as
     read-only."""
+    if version is not None and version < 0:
+        raise ValueError(
+            f"cannot read version {version} of {root}: table versions "
+            "start at 0"
+        )
     versions = _commit_versions(root)
     if not versions:
         raise ValueError(f"not a Delta table (no _delta_log commits): {root}")
@@ -793,6 +794,28 @@ def _replay(root: str, version: int | None) -> _State:
     return state
 
 
+def change_versions(
+    root: str, start: int, end: int | None = None
+) -> list[int]:
+    """The commit versions in ``[start, end]`` (``end`` None: through
+    the latest) whose changes a change-data-feed read serves. A range
+    that ends before it starts, or starts below the oldest commit still
+    in the log, is refused: the changes of vacuumed commits are gone,
+    and serving the rest would return a partial feed as if whole."""
+    if end is not None and end < start:
+        raise ValueError(
+            f"CDF range v{start}..v{end}: the ending version is before "
+            "the starting version"
+        )
+    versions = _commit_versions(root)
+    if versions and start < versions[0]:
+        raise ValueError(
+            f"CDF from v{start}: commits before v{versions[0]} are no "
+            "longer in the log (vacuumed)"
+        )
+    return [v for v in versions if v >= start and (end is None or v <= end)]
+
+
 def change_files(
     root: str, version: int
 ) -> tuple[list[dict[str, Any]], str | None]:
@@ -820,308 +843,3 @@ def change_files(
             "time); its row-level changes are not in the _delta_log"
         )
     return adds, "insert"
-
-
-class DeltaInteropTable:
-    """Read-only handle on an external Delta Lake table.
-
-    Duck-typed to the read surface of ``LakeTable``: ``to_df`` (with
-    version time travel), ``schema``, ``version()``, ``history()``.
-    Writes must go through the owning Delta writer — mutating someone
-    else's `_delta_log` without the full protocol would corrupt it.
-    """
-
-    read_only = True
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.root = str(Path(path))
-        if not is_delta_table(self.root):
-            raise ValueError(f"not a Delta table: {path}")
-
-    def version(self) -> int:
-        return _commit_versions(self.root)[-1]
-
-    @property
-    def schema(self) -> StructType:
-        state = _replay(self.root, None)
-        assert state.schema_json is not None
-        return StructType.fromJson(json.loads(state.schema_json))
-
-    def properties(self) -> dict[str, Any]:
-        return dict(_replay(self.root, None).properties)
-
-    def to_df(self, version: int | None = None) -> DataFrame:
-        state = _replay(self.root, version)
-        assert state.schema_json is not None
-        schema = StructType.fromJson(json.loads(state.schema_json))
-        if not state.adds:
-            return self.spark.createDataFrame([], schema)
-        plain = [a for a in state.adds.values() if not a.get("deletionVector")]
-        dvd = [a for a in state.adds.values() if a.get("deletionVector")]
-        parts = []
-        if plain:
-            parts.append(self._scan(state, schema, plain))
-        if dvd:
-            parts.append(self._scan_with_dv(state, schema, dvd))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _scan(
-        self,
-        state: _State,
-        schema: StructType,
-        adds: list[dict[str, Any]],
-        with_row_index: bool = False,
-    ) -> DataFrame:
-        extra = (
-            [
-                # normalize "file:/", "file://", "file:///" to a bare
-                # absolute path so the DV anti-join key matches the
-                # driver-side Path string
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ).alias("__dv_file"),
-                F.col("_metadata.row_index").alias("__dv_pos"),
-            ]
-            if with_row_index
-            else []
-        )
-        paths = [str(Path(self.root) / a["path"]) for a in adds]
-        # under column mapping every on-disk name — data columns, hive
-        # partition directories, partitionValues keys — is the PHYSICAL
-        # name; this map is identity when unmapped
-        phys_by_logical = physical_name_map(schema)
-        if state.partition_columns:
-            # Delta lays partitioned data out hive-style; basePath makes
-            # one scan recover the partition columns for all files. The
-            # layout must be UNIFORM below one base (Spark refuses
-            # "conflicting directory structures" otherwise — e.g. a
-            # foreign file at part=0/… next to an engine file at
-            # data/part=1/…). Non-uniform or non-hive layouts fall back
-            # to per-file literal columns from partitionValues (bounded
-            # by |files|).
-            pmap = state.phys_partition_map()
-            under_data = [a["path"].startswith("data/") for a in adds]
-            hive = all(
-                f"{pmap[c]}=" in a["path"]
-                for a in adds
-                for c in state.partition_columns
-            ) and all(
-                "=" in seg
-                for a in adds
-                for seg in Path(
-                    a["path"][5:] if a["path"].startswith("data/") else a["path"]
-                ).parent.parts
-            )
-            if hive and (all(under_data) or not any(under_data)):
-                base = (
-                    str(Path(self.root) / "data")
-                    if all(under_data)
-                    else self.root
-                )
-                df = (
-                    self.spark.read.option("basePath", base)
-                    .parquet(*paths)
-                )
-                return df.select(
-                    *[
-                        F.col(phys_by_logical[f.name])
-                        .cast(f.dataType)
-                        .alias(f.name)
-                        for f in schema.fields
-                    ],
-                    *extra,
-                )
-            parts = []
-            for a in adds:
-                pdf = self.spark.read.parquet(str(Path(self.root) / a["path"]))
-                cols = []
-                for f in schema.fields:
-                    if f.name in pmap:
-                        cols.append(
-                            F.lit(
-                                a["partitionValues"].get(pmap[f.name])
-                            )
-                            .cast(f.dataType)
-                            .alias(f.name)
-                        )
-                    else:
-                        cols.append(
-                            F.col(phys_by_logical[f.name])
-                            .cast(f.dataType)
-                            .alias(f.name)
-                        )
-                parts.append(pdf.select(*cols, *extra))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-        if state.mapping_mode != "none":
-            # column mapping: parquet columns carry PHYSICAL names —
-            # read under the physical schema, then rename back to the
-            # logical one (cast-by-position renames nested struct
-            # fields in the same expression)
-            phys = _physical_type(schema)
-            df = self.spark.read.schema(phys).parquet(*paths)
-            cols = [
-                F.col(pf.name).cast(lf.dataType).alias(lf.name)
-                for pf, lf in zip(phys.fields, schema.fields)
-            ]
-            return df.select(*cols, *extra)
-        df = self.spark.read.schema(schema).parquet(*paths)
-        if extra:
-            df = df.select("*", *extra)
-        return df
-
-    def _scan_with_dv(
-        self, state: _State, schema: StructType, adds: list[dict[str, Any]]
-    ) -> DataFrame:
-        """Scan DV-marked files and drop their deleted row indices.
-
-        The deleted set is (file, row_index) pairs materialized from the
-        roaring bitmaps — O(sum of DV cardinalities), which the protocol
-        keeps small by design — broadcast into a map-side anti-join, so
-        the data files themselves stream through with no shuffle."""
-        frames = []
-        for a in adds:
-            positions = _dv_positions(self.root, a["deletionVector"])
-            fpath = spark_file_key(self.root, a["path"])
-            frames.append(
-                pd.DataFrame(
-                    {"__dv_file": [fpath] * len(positions), "__dv_pos": positions}
-                )
-            )
-        deleted = pd.concat(frames, ignore_index=True)
-        scan = self._scan(state, schema, adds, with_row_index=True)
-        if deleted.empty:
-            return scan.drop("__dv_file", "__dv_pos")
-        deleted_df = self.spark.createDataFrame(deleted)
-        alive = scan.join(
-            F.broadcast(deleted_df), ["__dv_file", "__dv_pos"], "left_anti"
-        )
-        return alive.drop("__dv_file", "__dv_pos")
-
-    def read_changes(
-        self, starting_version: int = 0, ending_version: int | None = None
-    ) -> DataFrame:
-        """CDF synthesized from the ``_delta_log`` replay for external
-        tables the engine cannot write (partitioned, column-mapped).
-
-        Per the Delta CDF protocol, a version that carries ``cdc``
-        actions serves its changes EXCLUSIVELY from those
-        ``_change_data`` parquet files (they hold the table columns
-        plus ``_change_type`` = insert / update_preimage /
-        update_postimage / delete — the writer materialized the
-        row-level delta at commit time, which is how
-        ``delta.enableChangeDataFeed=true`` tables record UPDATE /
-        DELETE / MERGE). Versions without cdc actions fall back to
-        synthesis: an append-only commit's add files ARE the inserted
-        rows (``_change_type='insert'``); commits that removed files or
-        attached a deletion vector WITHOUT writing cdc actions (CDF was
-        off at write time) have no reconstructible row-level delta and
-        are refused loudly; ``dataChange=false`` rewrites (OPTIMIZE)
-        are skipped as no logical change. Same contract as
-        ``LakeTable.read_changes`` (reference surface:
-        ``delta_sharing_recipient.py:180-205``)."""
-        versions = _commit_versions(self.root)
-        end = versions[-1] if ending_version is None else ending_version
-        if starting_version < versions[0]:
-            raise ValueError(
-                f"CDF from v{starting_version}: commits before "
-                f"v{versions[0]} are no longer in the log (vacuumed)"
-            )
-        # one replay at `end` supplies schema/partition/mapping context
-        # for every scan and re-validates readability
-        state = _replay(self.root, end)
-        assert state.schema_json is not None
-        schema = StructType.fromJson(json.loads(state.schema_json))
-        # cdc files carry the data columns (physical names under
-        # mapping, like any data file) plus a literal _change_type
-        cdc_schema = StructType(
-            list(schema.fields) + [StructField("_change_type", StringType())]
-        )
-        log = Path(self.root) / DELTA_LOG_DIR
-        frames = []
-        for v in versions:
-            if v < starting_version or v > end:
-                continue
-            adds: list[dict[str, Any]] = []
-            cdcs: list[dict[str, Any]] = []
-            removed, dv_added = False, False
-            with open(log / f"{v:020d}.json") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    a = json.loads(line)
-                    if a.get("cdc") is not None:
-                        cdcs.append(a["cdc"])
-                    rm = a.get("remove")
-                    if rm is not None and rm.get("dataChange", True):
-                        removed = True
-                    add = a.get("add")
-                    if add is None or not add.get("dataChange", True):
-                        continue
-                    if add.get("deletionVector"):
-                        dv_added = True
-                    adds.append(add)
-            if cdcs:
-                frames.append(
-                    self._scan(state, cdc_schema, cdcs).withColumn(
-                        "_commit_version", F.lit(v).cast("long")
-                    )
-                )
-                continue
-            if removed:
-                raise NotImplementedError(
-                    f"CDF for version {v}: commit rewrote files without "
-                    "cdc actions (change data feed was not enabled at "
-                    "write time); row-level changes are not "
-                    "reconstructible from the _delta_log alone"
-                )
-            if dv_added:
-                raise NotImplementedError(
-                    f"CDF for version {v}: commit attached a deletion "
-                    "vector without cdc actions (change data feed was "
-                    "not enabled at write time); row-level changes are "
-                    "not reconstructible"
-                )
-            if not adds:
-                continue
-            frames.append(
-                self._scan(state, schema, adds)
-                .withColumn("_change_type", F.lit("insert"))
-                .withColumn("_commit_version", F.lit(v).cast("long"))
-            )
-        if not frames:
-            out_schema = schema.add("_change_type", "string").add(
-                "_commit_version", "long"
-            )
-            return self.spark.createDataFrame([], out_schema)
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-
-    def history(self) -> DataFrame:
-        rows = []
-        log = Path(self.root) / DELTA_LOG_DIR
-        for v in _commit_versions(self.root):
-            op, ts = None, None
-            with open(log / f"{v:020d}.json") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    a = json.loads(line)
-                    ci = a.get("commitInfo")
-                    if ci:
-                        op = ci.get("operation")
-                        ts = ci.get("timestamp")
-            rows.append((v, op, ts))
-        return self.spark.createDataFrame(
-            rows, "version BIGINT, operation STRING, timestamp_ms BIGINT"
-        )

@@ -28,7 +28,7 @@ tooling while this engine appends/MERGEs/deletes through its own
 DataFrame machinery.
 
 Snapshot state (active files, schema, properties) is resolved through
-``delta_interop._replay``, the read path external tables use, so every
+``delta_interop._replay``, the protocol module's log replay, so every
 write is round-tripped through the public protocol, never through
 private state. That replay is served from a process-wide snapshot
 cache keyed by the table root: a call re-lists ``_delta_log`` and
@@ -41,11 +41,10 @@ checkpoint. Write-back covers every readable SHAPE — partitioned tables
 tables (physical-named parquet + preserved mapping metadata), live
 deletion vectors — and honors writer OBLIGATIONS: CHECK constraints /
 invariants are enforced on new rows, generated columns recomputed,
-``delta.appendOnly`` enforced at commit time. ``check_writable``
-refuses only what the engine cannot honor (identity columns, nested
-generation expressions, unknown v7 writerFeatures);
-``LakeTable.for_path`` falls back to the read-only interop handle for
-those.
+``delta.appendOnly`` enforced at commit time. ``commit`` refuses, on
+the state it replays anyway, every write to a table declaring what the
+engine cannot honor (nested identity or generation expressions,
+unknown v7 writerFeatures); such tables stay readable ``LakeTable``s.
 """
 
 from __future__ import annotations
@@ -77,12 +76,12 @@ CHECKPOINT_INTERVAL = 10
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
 # v7 writerFeatures this engine actually implements. The protocol
-# obliges a writer to HONOR every active feature, so anything outside
-# this set refuses write-back (reads may still work via the interop
-# handle). appendOnly is enforced at commit time; invariants /
+# obliges a writer to HONOR every active feature, so a commit to a
+# table declaring anything outside this set is refused (reads still
+# work). appendOnly is enforced at commit time; invariants /
 # generatedColumns / identityColumns / checkConstraints are accepted
 # as FEATURES only while the table defines no such expression —
-# check_writable scans properties + schema metadata for actual use.
+# _check_writable scans the schema metadata for actual use.
 _SUPPORTED_WRITER_FEATURES = {
     "appendOnly",
     "invariants",
@@ -138,6 +137,36 @@ def _fields_with_writer_obligations(schema) -> list[str]:
 
     walk(schema, "", True)
     return hits
+
+
+def _check_writable(state: di._State, operation: str) -> None:
+    """Refuse a commit to a table declaring a WRITER obligation the
+    engine cannot honor — the protocol requires a writer to implement
+    every active writerFeature, not just to read the data correctly.
+    Refused are nested generated / identity column expressions and any
+    v7 writerFeature outside the supported set. CHECK constraints and
+    column invariants are ENFORCED at write time instead
+    (``LakeTable._enforce_constraints``), ``delta.appendOnly`` by
+    ``commit`` (data-changing removes refused)."""
+    if state.schema_json:
+        offenders = _fields_with_writer_obligations(
+            StructType.fromJson(json.loads(state.schema_json))
+        )
+        if offenders:
+            raise NotImplementedError(
+                f"{operation} refused: the table declares nested "
+                f"identity/generation expressions on {offenders}, which "
+                "this writer cannot evaluate (the table stays readable)"
+            )
+    unsupported = set(state.protocol.get("writerFeatures") or []) - (
+        _SUPPORTED_WRITER_FEATURES
+    )
+    if unsupported:
+        raise NotImplementedError(
+            f"{operation} refused: Delta writer features not supported: "
+            f"{sorted(unsupported)} (a writer must honor every declared "
+            "writer feature; the table stays readable)"
+        )
 
 
 def _assign_mapping(dt, next_id: int):
@@ -433,44 +462,6 @@ class DeltaLogBackend:
     def mapping_mode(self, root: str) -> str:
         return self._state(root).mapping_mode
 
-    def check_writable(self, root: str) -> None:
-        """Refuse write-back where the engine cannot honor a WRITER
-        obligation the table declares — the protocol requires a writer
-        to implement every active writerFeature, not just to read the
-        data correctly.
-
-        Every readable SHAPE is writable: partitioned tables lay files
-        out hive-style with ``partitionValues``-stamped adds;
-        column-mapped tables write parquet under PHYSICAL names with
-        physical-keyed stats (``LakeTable._prep_write``); live deletion
-        vectors are fine (every read path is DV-aware, copy-on-write
-        reads alive rows only). Refused instead are declared writer
-        OBLIGATIONS the engine cannot evaluate: generated / identity
-        column expressions, and any v7 writerFeature outside the
-        supported set. CHECK constraints (``delta.constraints.*``) and
-        column invariants are boolean SQL and are ENFORCED at write
-        time instead (``LakeTable._enforce_constraints``);
-        ``delta.appendOnly`` is enforced at commit time (data-changing
-        removes refused). Unreadable shapes raise via the replay
-        itself."""
-        state = self._state(root)
-        if state.schema_json:
-            offenders = _fields_with_writer_obligations(
-                StructType.fromJson(json.loads(state.schema_json))
-            )
-            if offenders:
-                raise NotImplementedError(
-                    "table declares column invariants/generated/identity "
-                    f"expressions on {offenders}; this writer cannot "
-                    "evaluate them"
-                )
-        feats = set(state.protocol.get("writerFeatures") or [])
-        unsupported = feats - _SUPPORTED_WRITER_FEATURES
-        if unsupported:
-            raise NotImplementedError(
-                f"Delta writer features not supported: {sorted(unsupported)}"
-            )
-
     def active_files(
         self, root: str, up_to: int | None = None
     ) -> list[dict[str, Any]]:
@@ -673,6 +664,8 @@ class DeltaLogBackend:
             if self.latest_version(root) is not None
             else None
         )
+        if state0 is not None:
+            _check_writable(state0, operation)
         if remove and data_change and state0 is not None:
             # delta.appendOnly forbids data-changing removes; OPTIMIZE
             # (dataChange=false) stays legal. Enforced here — the one
@@ -787,6 +780,7 @@ class DeltaLogBackend:
                         )
                 planned_prev = prev  # disjoint files, same metadata
                 state0 = self._state(root)  # refresh after the race
+                _check_writable(state0, operation)
             version = 0 if prev is None else prev + 1
             lines: list[dict[str, Any]] = []
             ci_params = {

@@ -1411,10 +1411,6 @@ def run_metadata(spark: SparkSession, sql: str) -> DataFrame | None:
         if m.group("val").upper() == "NULL":
             t.unset_properties(["comment"])
         else:
-            # same writer-obligation gate every other metadata commit
-            # applies — a table with unhonored writerFeatures must not
-            # get a protocol-violating metaData commit from a comment
-            t._log.check_writable(t.root)
             comment = m.group("val")[1:-1].replace("''", "'")
             snap = t._log.latest_version(t.root)
             t._log.commit(

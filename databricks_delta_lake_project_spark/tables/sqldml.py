@@ -2145,11 +2145,6 @@ def _run_clone(
             continue
         raise ValueError(f"CLONE: cannot parse clause at {rest[:60]!r}")
     src = resolve_table(spark, sref.strip("`"))
-    if not hasattr(src, "clone"):
-        raise NotImplementedError(
-            f"CLONE source {sref!r} is not engine-writable (read-only "
-            "interop handle)"
-        )
     if ts_lit is not None:
         if ver is not None:
             raise ValueError("CLONE: VERSION and TIMESTAMP are exclusive")

@@ -395,30 +395,17 @@ class LakeTable:
         return is_delta_table(str(Path(path)))
 
     @classmethod
-    def for_path(cls, spark: SparkSession, path: str):
-        """Open the Delta table at ``path``. It opens READ-WRITE
-        for every readable SHAPE — partitioned, column-mapped, live
-        deletion vectors — with appends/MERGEs landing as real
-        ``_delta_log`` commits; CHECK constraints and invariants are
-        ENFORCED on new rows and generated columns recomputed. Only
-        obligations the engine cannot honor (identity columns, nested
-        generation expressions, unknown v7 writerFeatures) fall back to
-        the read-only interop handle (``delta_interop.DeltaInteropTable``
-        — same ``to_df``/``schema``/``version``/``history`` read
-        surface), so existing Delta tables from the reference stack
-        remain queryable."""
-        root = str(Path(path))
-        if cls.is_table(root):
-            try:
-                DeltaLogBackend(spark).check_writable(root)
-            except NotImplementedError:
-                # not writable by this engine — keep it queryable
-                # (readable cases) or failing loudly (unreadable
-                # feature refusals surface again on to_df)
-                from .delta_interop import DeltaInteropTable
-
-                return DeltaInteropTable(spark, root)
-        return cls(spark, root)
+    def for_path(cls, spark: SparkSession, path: str) -> "LakeTable":
+        """Open the Delta table at ``path``. Every readable SHAPE —
+        partitioned, column-mapped, live deletion vectors — opens as a
+        ``LakeTable`` whose writes land as real ``_delta_log`` commits;
+        CHECK constraints and invariants are ENFORCED on new rows and
+        generated columns recomputed. A table declaring an obligation
+        the engine cannot honor (nested identity or generation
+        expressions, unknown v7 writerFeatures) opens the same way and
+        stays readable; every write to it is refused at commit, naming
+        the obligation."""
+        return cls(spark, path)
 
     # -- reads -------------------------------------------------------------
 
@@ -903,29 +890,18 @@ class LakeTable:
         params = {"mode": "Append", "mergeSchema": merge_schema}
         if parameters:
             params.update(parameters)
-        try:
-            v = self._log.commit(
-                self.root, operation, adds, [], schema_json,
-                parameters=params,
-                metrics={"numOutputRows": n, "numFiles": len(adds)},
-                properties=props,
-                schema_authoritative=hwm_json is not None,
-                # watermark commits are planned against the snapshot
-                # read at append START; losing the race must recompute
-                # (fresh watermark), never regress a rival's advance
-                **(
-                    {"expected_version": snap}
-                    if hwm_json is not None
-                    else {}
-                ),
-            )
-        except Exception:
-            # the staged files will never be referenced; drop them so a
-            # retried append does not leak data bytes
-            for e in adds:
-                (Path(self.root) / e["path"]).unlink(missing_ok=True)
-            raise
-        return v
+        return self._commit_cleanup(
+            adds,
+            self.root, operation, adds, [], schema_json,
+            parameters=params,
+            metrics={"numOutputRows": n, "numFiles": len(adds)},
+            properties=props,
+            schema_authoritative=hwm_json is not None,
+            # watermark commits are planned against the snapshot read
+            # at append START; losing the race must recompute (fresh
+            # watermark), never regress a rival's advance
+            **({"expected_version": snap} if hwm_json is not None else {}),
+        )
 
     def txn_version(self, app_id: str) -> int:
         """Highest committed transaction version for ``app_id``, or -1.
@@ -976,22 +952,17 @@ class LakeTable:
         )
         # computed against the generation-time schema (see append())
         hwm_json = self._identity_hwm_schema(adds, schema=tbl_schema)
-        try:
-            v = self._log.commit(
-                self.root, "WRITE", adds, [], hwm_json or out.schema.json(),
-                parameters={
-                    "mode": "Append",
-                    "txn": {"appId": app_id, "version": version},
-                },
-                metrics={"numOutputRows": n, "numFiles": len(adds)},
-                schema_authoritative=hwm_json is not None,
-                **({"expected_version": snap} if hwm_json is not None else {}),
-            )
-        except Exception:
-            for e in adds:
-                (Path(self.root) / e["path"]).unlink(missing_ok=True)
-            raise
-        return v
+        return self._commit_cleanup(
+            adds,
+            self.root, "WRITE", adds, [], hwm_json or out.schema.json(),
+            parameters={
+                "mode": "Append",
+                "txn": {"appId": app_id, "version": version},
+            },
+            metrics={"numOutputRows": n, "numFiles": len(adds)},
+            schema_authoritative=hwm_json is not None,
+            **({"expected_version": snap} if hwm_json is not None else {}),
+        )
 
     def _identity_hwm_schema(
         self, adds: list[dict[str, Any]], schema: StructType | None = None
@@ -1107,18 +1078,14 @@ class LakeTable:
         hwm_json = self._identity_hwm_schema(
             adds, schema=StructType.fromJson(json.loads(base_json))
         )
-        try:
-            return self._log.commit(
-                self.root, "WRITE", adds, old, hwm_json or base_json,
-                parameters={"mode": "Overwrite"},
-                metrics={"numOutputRows": n, "numFiles": len(adds)},
-                expected_version=snap,
-                schema_authoritative=hwm_json is not None,
-            )
-        except Exception:
-            for e in adds:
-                (Path(self.root) / e["path"]).unlink(missing_ok=True)
-            raise
+        return self._commit_cleanup(
+            adds,
+            self.root, "WRITE", adds, old, hwm_json or base_json,
+            parameters={"mode": "Overwrite"},
+            metrics={"numOutputRows": n, "numFiles": len(adds)},
+            expected_version=snap,
+            schema_authoritative=hwm_json is not None,
+        )
 
     def delete(
         self,
@@ -1736,7 +1703,8 @@ class LakeTable:
             "numFilesAdded": len(adds),
             "numOutputRows": n,
         }
-        self._log.commit(
+        self._commit_cleanup(
+            adds,
             self.root, "OPTIMIZE", adds, [e["path"] for e in files],
             self._log.schema_at(self.root),
             parameters={"zOrderBy": zorder_by or [], "predicate": where or ""},
@@ -1965,7 +1933,6 @@ class LakeTable:
         partition tuple). Each disjunct prunes and whole-file-matches
         INDEPENDENTLY (an OR predicate as one string would defeat the
         stats fast path), the union swaps in ONE commit."""
-        self._log.check_writable(self.root)
         preds = [predicate] if isinstance(predicate, str) else list(predicate)
         if not preds:
             raise ValueError("replace_where: empty predicate list")
@@ -2209,7 +2176,6 @@ class LakeTable:
                 "numRemovedFiles": 0,
                 "dryRun": dry_run,
             }
-        self._log.check_writable(self.root)
         self._log.commit(
             self.root,
             "FSCK",
@@ -2265,7 +2231,6 @@ class LakeTable:
         in the schema, the columnMapping physicalName stays, no data
         file is rewritten, and pre-rename versions keep time-traveling
         under their old names."""
-        self._log.check_writable(self.root)
         v = self._log.rename_column(self.root, old, new)
         return self._migrate_column_props(old, new) or v
 
@@ -2273,7 +2238,6 @@ class LakeTable:
         """Metadata-only column drop (column-mapped Delta tables): the
         logical field leaves the schema; existing parquet keeps the
         physical column for pre-drop time travel."""
-        self._log.check_writable(self.root)
         v = self._log.drop_column(self.root, col)
         return self._migrate_column_props(col, None) or v
 
@@ -2338,7 +2302,6 @@ class LakeTable:
         if not added:
             raise ValueError("ADD COLUMNS: empty column list")
         evolved = StructType(list(schema.fields) + added)
-        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         return self._log.commit(
             self.root,
@@ -2373,7 +2336,6 @@ class LakeTable:
             )
             for f in schema.fields
         ]
-        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         return self._log.commit(
             self.root,
@@ -2393,7 +2355,6 @@ class LakeTable:
         ``engine.tags.<k>`` table properties so they ride the commit
         log, survive restarts, and show in DESCRIBE EXTENDED /
         SHOW TBLPROPERTIES."""
-        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         props = dict(self.properties())
         if unset:
@@ -2423,7 +2384,6 @@ class LakeTable:
         ``_enforce_constraints`` (zero cost until a constraint
         exists). At 100 TB the validation is one full-scan AND-agg —
         the price Databricks itself pays; the commit is metadata."""
-        self._log.check_writable(self.root)
         cname = name.lower()
         key = f"delta.constraints.{cname}"
         snap = self._log.latest_version(self.root)
@@ -2452,7 +2412,6 @@ class LakeTable:
         """``ALTER TABLE t DROP CONSTRAINT [IF EXISTS] name`` —
         metadata-only; every metaData action snapshots the full
         configuration, so the key is simply omitted."""
-        self._log.check_writable(self.root)
         cname = name.lower()
         key = f"delta.constraints.{cname}"
         snap = self._log.latest_version(self.root)
@@ -2477,7 +2436,6 @@ class LakeTable:
         """``ALTER TABLE t UNSET TBLPROPERTIES (...)`` — metadata-only,
         keys are omitted from the configuration snapshot, like
         ``drop_constraint``."""
-        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         props = dict(self.properties())
         for k in keys:
@@ -2531,7 +2489,6 @@ class LakeTable:
             else:
                 meta["engine.notNull"] = True
             fields.append(StructField(f.name, f.dataType, nullable, meta))
-        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         return self._log.commit(
             self.root,
@@ -2605,7 +2562,6 @@ class LakeTable:
                 "safe widening (integer up-chain, float->double, or "
                 "decimal precision/scale growth)"
             )
-        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         fields = [
             StructField(f.name, new if f.name == actual else f.dataType,
@@ -2652,7 +2608,6 @@ class LakeTable:
             else:
                 meta["CURRENT_DEFAULT"] = expr
             fields.append(StructField(f.name, f.dataType, f.nullable, meta))
-        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         return self._log.commit(
             self.root,
@@ -2697,7 +2652,6 @@ class LakeTable:
             raise ValueError(
                 f"column tags need an un-dotted column name, got {col!r}"
             )
-        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         props = dict(self.properties())
         for k, v in tags.items():
@@ -2742,7 +2696,6 @@ class LakeTable:
         names = {f.name for f in self.schema.fields}
         if col not in names:
             raise ValueError(f"no such column {col!r} (have {sorted(names)})")
-        self._log.check_writable(self.root)
         snap = self._log.latest_version(self.root)
         props = dict(self.properties())
         key = f"engine.mask.{col}"
@@ -2802,12 +2755,14 @@ class LakeTable:
             if p.resolve() not in kept_dvs and p.stat().st_mtime < cutoff:
                 victims.append(p.name)
         if not dry_run:
-            for rel in victims:
-                (Path(self.root) / rel).unlink()
+            # commit first (Delta's VACUUM START): a table this engine
+            # may not write is refused before any file is deleted
             self._log.commit(
                 self.root, "VACUUM", [], [], self._log.schema_at(self.root),
                 metrics={"numDeletedFiles": len(victims)},
             )
+            for rel in victims:
+                (Path(self.root) / rel).unlink()
         return victims
 
     # -- change data feed --------------------------------------------------
@@ -2902,15 +2857,13 @@ class LakeTable:
         rewrote files without cdc actions (CDF off at write time) is
         refused loudly, naming the version, instead of returning wrong
         changes (reference surface:
-        ``delta_sharing_recipient.py:180-205``)."""
-        from .delta_interop import change_files
+        ``delta_sharing_recipient.py:180-205``); so is a range starting
+        below the oldest commit left in the log, or ending before it
+        starts (``delta_interop.change_versions``)."""
+        from .delta_interop import change_files, change_versions
 
         frames = []
-        for v in self._log.list_versions(self.root):
-            if v < starting_version or (
-                ending_version is not None and v > ending_version
-            ):
-                continue
+        for v in change_versions(self.root, starting_version, ending_version):
             entries, change_type = change_files(self.root, v)
             if not entries:
                 continue
@@ -3720,19 +3673,15 @@ class MergeBuilder:
         schema_json = hwm_json or (
             work_schema.json() if new_cols else t._log.schema_at(t.root)
         )
-        try:
-            t._log.commit(
-                t.root, "MERGE", adds_all, [],
-                schema_json,
-                parameters={"predicate": self.condition},
-                metrics=metrics,
-                expected_version=snap,
-                schema_authoritative=hwm_json is not None or bool(new_cols),
-            )
-        except Exception:
-            for e in adds_all:
-                (Path(t.root) / e["path"]).unlink(missing_ok=True)
-            raise
+        t._commit_cleanup(
+            adds_all,
+            t.root, "MERGE", adds_all, [],
+            schema_json,
+            parameters={"predicate": self.condition},
+            metrics=metrics,
+            expected_version=snap,
+            schema_authoritative=hwm_json is not None or bool(new_cols),
+        )
         return metrics
 
     def _execute_once(
@@ -4147,23 +4096,19 @@ class MergeBuilder:
         schema_json = hwm_json or (
             work_schema.json() if new_cols else t._log.schema_at(t.root)
         )
-        try:
-            t._log.commit(
-                t.root, "MERGE", adds_all, removes_all,
-                schema_json,
-                parameters={"predicate": self.condition},
-                metrics=metrics,
-                expected_version=snap,
-                schema_authoritative=hwm_json is not None or bool(new_cols),
-                **({"cdc": cdc} if cdc else {}),
-            )
-        except Exception:
-            # a lost race must not orphan the freshly written outputs —
-            # rewritten/new data files, fresh DV sidecars, staged cdc.
-            # DV re-adds point at EXISTING files and are never removed.
-            for e in fresh_adds + cdc:
-                (Path(t.root) / e["path"]).unlink(missing_ok=True)
-            raise
+        # a failed commit must not orphan the freshly written outputs —
+        # rewritten/new data files, fresh DV sidecars, staged cdc. DV
+        # re-adds point at EXISTING files and are never removed.
+        t._commit_cleanup(
+            fresh_adds + cdc,
+            t.root, "MERGE", adds_all, removes_all,
+            schema_json,
+            parameters={"predicate": self.condition},
+            metrics=metrics,
+            expected_version=snap,
+            schema_authoritative=hwm_json is not None or bool(new_cols),
+            **({"cdc": cdc} if cdc else {}),
+        )
         if self._persisted is not None:
             joined.unpersist()
             self._persisted = None

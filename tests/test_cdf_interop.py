@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+import delta_reference as ref
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -21,10 +22,7 @@ from databricks_delta_lake_project_spark.governance.sharing import (
     ShareProvider,
     SharingClient,
 )
-from databricks_delta_lake_project_spark.tables import (
-    DeltaInteropTable,
-    LakeTable,
-)
+from databricks_delta_lake_project_spark.tables import LakeTable
 
 SCHEMA_JSON = json.dumps(
     {
@@ -157,26 +155,47 @@ EXPECT_ALL = {
 
 
 def _tuples(df):
+    return _ref_tuples(df.collect())
+
+
+def _ref_tuples(rows):
     return {
         (r["id"], r["val"], r["_change_type"], r["_commit_version"])
-        for r in df.collect()
+        for r in rows
     }
 
 
 def test_interop_cdf_serves_cdc_actions(spark, cdf_table):
-    it = DeltaInteropTable(spark, str(cdf_table))
-    assert _tuples(it.read_changes(0)) == EXPECT_ALL
+    root = str(cdf_table)
+    assert _ref_tuples(ref.changes(root, 0)) == EXPECT_ALL
     # range filters apply per commit
-    assert _tuples(it.read_changes(2)) == {
+    assert _ref_tuples(ref.changes(root, 2)) == {
         t for t in EXPECT_ALL if t[3] >= 2
     }
-    assert _tuples(it.read_changes(1, ending_version=1)) == {
+    assert _ref_tuples(ref.changes(root, 1, 1)) == {
         t for t in EXPECT_ALL if t[3] == 1
     }
     # snapshot read unaffected: final state only
-    assert {(r["id"], r["val"]) for r in it.to_df().collect()} == {
+    assert {(r["id"], r["val"]) for r in ref.rows(root)} == {
         (2, "B!"), (3, "c"), (4, "d"),
     }
+
+
+def test_reference_reader_shares_no_engine_read_path(cdf_table, monkeypatch):
+    """The reference reader folds the log itself: with the engine's
+    snapshot cache and change-file planner unavailable it still reads
+    the table and its change feed (it takes no Spark session at all)."""
+    from databricks_delta_lake_project_spark.tables import delta_interop as di
+
+    def unavailable(*args, **kwargs):
+        raise AssertionError("the reference reader used an engine read path")
+
+    monkeypatch.setattr(di, "_replay", unavailable)
+    monkeypatch.setattr(di, "change_files", unavailable)
+    monkeypatch.setattr(di, "_snapshots", None)
+    root = str(cdf_table)
+    assert _ref_tuples(ref.changes(root)) == EXPECT_ALL
+    assert len(ref.rows(root)) == 3
 
 
 def test_laketable_cdf_serves_cdc_actions(spark, cdf_table):
@@ -219,9 +238,10 @@ def test_rewrite_without_cdc_still_refuses(spark, tmp_path):
             _add("f1.parquet"),
         ],
     )
-    it = DeltaInteropTable(spark, str(root))
     with pytest.raises(NotImplementedError, match="without cdc actions"):
-        it.read_changes(0).collect()
+        LakeTable.for_path(spark, str(root)).read_changes(0).collect()
+    with pytest.raises(NotImplementedError, match="without cdc actions"):
+        ref.changes(str(root), 0)
 
 
 def test_shared_cdf_update_delete_passthrough(spark, cdf_table, tmp_path):
@@ -243,7 +263,7 @@ def test_shared_cdf_update_delete_passthrough(spark, cdf_table, tmp_path):
 def test_engine_dml_writes_protocol_cdc(spark, tmp_path):
     """Write side: the engine's own Delta-format DML must land cdc
     actions + _change_data files when CDF is on, so EXTERNAL Delta
-    readers (modeled by DeltaInteropTable's independent replay) serve
+    readers (modeled by the independent reference reader) serve
     exact update/delete/merge changes instead of refusing."""
     from pyspark.sql import Row
 
@@ -274,12 +294,8 @@ def test_engine_dml_writes_protocol_cdc(spark, tmp_path):
         assert c["cdc"], f"version {v} has no cdc actions"
         assert all(a["path"].startswith("_change_data/") for a in c["cdc"])
 
-    # independent replay reader serves the full change history
-    it = DeltaInteropTable(spark, str(tmp_path / "engine_cdf"))
-    got = {
-        (r["id"], r["val"], r["_change_type"], r["_commit_version"])
-        for r in it.read_changes(0).collect()
-    }
+    # the independent reference reader serves the full change history
+    got = _ref_tuples(ref.changes(str(tmp_path / "engine_cdf"), 0))
     assert got == {
         (1, "a", "insert", 0),
         (2, "b", "insert", 0),
@@ -318,10 +334,10 @@ def test_engine_partitioned_dml_protocol_cdc(spark, tmp_path):
     assert c["cdc"] and all(
         a["partitionValues"] == {"p": "x"} for a in c["cdc"]
     )
-    it = DeltaInteropTable(spark, str(tmp_path / "engine_cdf_part"))
     dels = [
         (r["p"], r["id"])
-        for r in it.read_changes(1).filter("_change_type = 'delete'").collect()
+        for r in ref.changes(str(tmp_path / "engine_cdf_part"), 1)
+        if r["_change_type"] == "delete"
     ]
     assert dels == [("x", 2)]
 

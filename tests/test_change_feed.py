@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import delta_reference as ref
+import pytest
 from pyspark.sql import Row
 from pyspark.sql.readwriter import DataFrameWriter
 
@@ -16,7 +18,6 @@ from databricks_delta_lake_project_spark.sources.cdf_stream import (
 )
 from databricks_delta_lake_project_spark.tables import LakeTable
 from databricks_delta_lake_project_spark.tables.delta_interop import (
-    DeltaInteropTable,
     _last_checkpoint,
 )
 from databricks_delta_lake_project_spark.tables.delta_log import (
@@ -32,9 +33,13 @@ def _kv(spark, rows):
 
 
 def _tuples(df):
+    return _ref_tuples(df.collect())
+
+
+def _ref_tuples(rows):
     return sorted(
         (r["k"], r["v"], r["_change_type"], r["_commit_version"])
-        for r in df.collect()
+        for r in rows
     )
 
 
@@ -45,6 +50,27 @@ def _cdf_table(spark, root, n=3):
         df=_kv(spark, [(i, f"v{i}") for i in range(n)]),
         properties=CDF,
     )
+
+
+def _checkpoint_only_table(spark, root):
+    """A partitioned CDF table at v11 whose log starts at the v10
+    checkpoint: v10 is a CDF UPDATE, v11 an append; the JSON commits
+    v0-v9 are deleted."""
+    t = LakeTable.create(
+        spark,
+        str(root),
+        df=spark.createDataFrame([Row(p="x", k=0, v="v0")]),
+        partition_by=["p"],
+        properties=CDF,
+    )
+    for i in range(1, CHECKPOINT_INTERVAL):
+        t.append(spark.createDataFrame([Row(p="y", k=i, v=f"v{i}")]))
+    t.update("k = 0", {"v": "'zero'"})  # v10, checkpointed
+    t.append(spark.createDataFrame([Row(p="x", k=11, v="v11")]))  # v11
+    assert _last_checkpoint(t.root)["version"] == CHECKPOINT_INTERVAL
+    for v in range(CHECKPOINT_INTERVAL):
+        (Path(t.root) / "_delta_log" / f"{v:020d}.json").unlink()
+    return t
 
 
 def _merge(t, rows):
@@ -94,7 +120,6 @@ def test_write_after_commit_cannot_tear_the_change_set(
     _merge(t, [(2, "two"), (7, "seven")])
     (v_merge,) = committed
 
-    ref = DeltaInteropTable(spark, t.root)
     assert _tuples(t.read_changes(v_update, v_update)) == [
         (1, "one", "update_postimage", v_update),
         (1, "v1", "update_preimage", v_update),
@@ -105,7 +130,7 @@ def test_write_after_commit_cannot_tear_the_change_set(
         (7, "seven", "insert", v_merge),
     ]
     for v in (v_update, v_merge):
-        assert _tuples(t.read_changes(v, v)) == _tuples(ref.read_changes(v, v))
+        assert _tuples(t.read_changes(v, v)) == _ref_tuples(ref.changes(t.root, v, v))
 
 
 def test_no_private_change_copy_and_vacuum_reclaims_change_bytes(spark, tmp_path):
@@ -151,7 +176,7 @@ def test_noop_merge_records_an_empty_change_set(spark, tmp_path):
     assert m["numTargetRowsUpdated"] == 0 and m["numRemovedFiles"] == 1
     v = t.version()
     assert t.read_changes(v, v).count() == 0
-    assert DeltaInteropTable(spark, t.root).read_changes(v, v).count() == 0
+    assert ref.changes(t.root, v, v) == []
 
 
 def test_insert_only_merge_into_empty_cdf_table_reads_as_inserts(spark, tmp_path):
@@ -166,7 +191,7 @@ def test_insert_only_merge_into_empty_cdf_table_reads_as_inserts(spark, tmp_path
     assert t._log.read_commit(t.root, v)["cdc"] == []
     want = [(1, "a", "insert", v), (2, "b", "insert", v)]
     assert _tuples(t.read_changes(v, v)) == want
-    assert _tuples(DeltaInteropTable(spark, t.root).read_changes(v, v)) == want
+    assert _ref_tuples(ref.changes(t.root, v, v)) == want
 
 
 def test_cdf_stream_reads_a_table_whose_log_starts_at_a_checkpoint(
@@ -175,21 +200,7 @@ def test_cdf_stream_reads_a_table_whose_log_starts_at_a_checkpoint(
     """With the JSON commits before the checkpoint removed, the stream
     takes schema, partition columns and mapping from the checkpointed
     snapshot and delivers every version from ``startingVersion``."""
-    t = LakeTable.create(
-        spark,
-        str(tmp_path / "ckpt_only"),
-        df=spark.createDataFrame([Row(p="x", k=0, v="v0")]),
-        partition_by=["p"],
-        properties=CDF,
-    )
-    for i in range(1, CHECKPOINT_INTERVAL):
-        t.append(spark.createDataFrame([Row(p="y", k=i, v=f"v{i}")]))
-    t.update("k = 0", {"v": "'zero'"})  # v10, checkpointed
-    t.append(spark.createDataFrame([Row(p="x", k=11, v="v11")]))  # v11
-    assert _last_checkpoint(t.root)["version"] == CHECKPOINT_INTERVAL
-    for v in range(CHECKPOINT_INTERVAL):
-        (Path(t.root) / "_delta_log" / f"{v:020d}.json").unlink()
-
+    t = _checkpoint_only_table(spark, tmp_path / "ckpt_only")
     want = [
         ("x", 0, "v0", "update_preimage", 10),
         ("x", 0, "zero", "update_postimage", 10),
@@ -222,6 +233,37 @@ def test_cdf_stream_reads_a_table_whose_log_starts_at_a_checkpoint(
         (r["p"], r["k"], r["v"], r["_change_type"], r["_commit_version"])
         for r in got.collect()
     ) == want
+
+
+def test_cdf_over_a_vacuumed_range_refuses(spark, tmp_path):
+    """A change feed that starts below the oldest commit left in the log
+    refuses, naming the vacuumed versions, instead of returning the
+    changes of the commits that remain as if they were all; so does a
+    range that ends before it starts. The batch reader, the stream and
+    the reference reader agree."""
+    t = _checkpoint_only_table(spark, tmp_path / "vacuumed")
+    with pytest.raises(ValueError, match="before v10 .*vacuumed"):
+        t.read_changes(0)
+    with pytest.raises(ValueError, match="before v10 .*vacuumed"):
+        ref.changes(t.root, 0)
+    with pytest.raises(ValueError, match="v11..v10"):
+        t.read_changes(11, 10)
+    assert t.read_changes(10, 10).count() == 2
+
+    register_cdf_stream(spark)
+    q = (
+        spark.readStream.format("delta_cdf_stream")
+        .option("path", t.root)
+        .load()
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "stream_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="before v10 .*vacuumed"):
+        q.awaitTermination()
+    assert not list((tmp_path / "out").glob("*.parquet"))
 
 
 def _jobs(spark) -> int:

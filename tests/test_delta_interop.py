@@ -1,14 +1,17 @@
-"""Read-only Delta Lake format interop (`_delta_log` replay) over
+"""Reading Delta tables other writers built (`_delta_log` replay) over
 hand-built fixtures that follow the open Delta protocol: JSON commits
 with protocol/metaData/add/remove/commitInfo actions, hive-style
 partition paths, `_last_checkpoint` + classic checkpoint parquet, and
-reader-feature refusal."""
+reader-feature refusal. Every shape is read through ``LakeTable``, the
+engine's one reader, and checked against the pyarrow reference reader
+(``delta_reference``)."""
 
 from __future__ import annotations
 
 import json
 from pathlib import Path
 
+import delta_reference as ref
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -20,7 +23,6 @@ from pyspark.sql.types import (
 )
 
 from databricks_delta_lake_project_spark.tables import (
-    DeltaInteropTable,
     LakeTable,
     is_delta_table,
 )
@@ -111,29 +113,28 @@ def delta_table(spark, tmp_path):
 
 
 def test_detect_and_open(spark, delta_table):
-    """An unpartitioned external Delta table now opens WRITABLE through
-    the Delta log backend (write-back); the interop handle remains the
-    read path for unsupported shapes (see test_delta_writeback)."""
+    """An unpartitioned external Delta table opens WRITABLE through
+    the Delta log backend (write-back)."""
     assert is_delta_table(str(delta_table))
     t = LakeTable.for_path(spark, str(delta_table))
     assert isinstance(t, LakeTable)
-    assert t.version() == 1
+    assert t.version() == 1 == ref.version(str(delta_table))
     assert t.properties() == {"delta.appendOnly": "false"}
-    ro = DeltaInteropTable(spark, str(delta_table))
-    assert ro.read_only and ro.version() == 1
 
 
 def test_active_file_set_and_time_travel(spark, delta_table):
-    t = DeltaInteropTable(spark, str(delta_table))
+    t = LakeTable(spark, str(delta_table))
     latest = {(r["id"], r["name"]) for r in t.to_df().collect()}
     assert latest == {(1, "a"), (2, "b"), (3, "c2"), (4, "d")}
     v0 = {(r["id"], r["name"]) for r in t.to_df(version=0).collect()}
     assert v0 == {(1, "a"), (2, "b"), (3, "c")}
     assert [f.name for f in t.schema.fields] == ["id", "name", "part"]
+    assert {(r["id"], r["name"]) for r in ref.rows(str(delta_table))} == latest
+    assert {(r["id"], r["name"]) for r in ref.rows(str(delta_table), 0)} == v0
 
 
 def test_history(spark, delta_table):
-    t = DeltaInteropTable(spark, str(delta_table))
+    t = LakeTable(spark, str(delta_table))
     rows = {(r["version"], r["operation"]) for r in t.history().collect()}
     assert rows == {(0, "WRITE"), (1, "MERGE")}
 
@@ -153,11 +154,12 @@ def test_partitioned_hive_layout(spark, tmp_path):
             {"commitInfo": {"operation": "WRITE", "timestamp": 1}},
         ],
     )
-    t = DeltaInteropTable(spark, str(root))
+    t = LakeTable(spark, str(root))
     df = t.to_df()
     assert dict(df.dtypes)["part"] == "int"
     got = {(r["id"], r["part"]) for r in df.collect()}
     assert got == {(1, 0), (2, 0), (3, 1)}
+    assert {(r["id"], r["part"]) for r in ref.rows(str(root))} == got
     # Partition pruning must reach the scan (one directory read).
     plan = df.filter(F.col("part") == 1)._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan, plan
@@ -168,7 +170,7 @@ def test_checkpoint_replay(spark, delta_table):
     the checkpoint parquet, then applies only v2."""
     root = delta_table
     log = root / "_delta_log"
-    t = DeltaInteropTable(spark, str(root))
+    t = LakeTable(spark, str(root))
     # Build a classic checkpoint for v1 from the replayed state.
     cp_rows = [
         {"add": {"path": "f0.parquet", "partitionValues": {}, "size": 1, "modificationTime": 1000, "dataChange": True}},
@@ -193,6 +195,7 @@ def test_checkpoint_replay(spark, delta_table):
     )
     got = {(r["id"], r["name"]) for r in t.to_df().collect()}
     assert got == {(3, "c2"), (4, "d")}
+    assert {(r["id"], r["name"]) for r in ref.rows(str(root))} == got
     # Pre-checkpoint time travel still replays JSON from zero.
     v0 = {r["id"] for r in t.to_df(version=0).collect()}
     assert v0 == {1, 2, 3}
@@ -210,7 +213,7 @@ def test_unsupported_reader_features_refused(spark, tmp_path):
             {"add": {"path": "f0.parquet", "partitionValues": {}, "size": 1, "modificationTime": 1, "dataChange": True}},
         ],
     )
-    t = DeltaInteropTable(spark, str(root))
+    t = LakeTable.for_path(spark, str(root))
     with pytest.raises(NotImplementedError, match="typeWidening"):
         t.to_df()
 
@@ -232,7 +235,7 @@ def test_column_mapping_refused_even_on_legacy_protocol(spark, tmp_path):
             {"add": {"path": "f0.parquet", "partitionValues": {}, "size": 1, "modificationTime": 1, "dataChange": True}},
         ],
     )
-    t = DeltaInteropTable(spark, str(root))
+    t = LakeTable.for_path(spark, str(root))
     with pytest.raises(NotImplementedError, match="column mapping"):
         t.to_df()
 
@@ -240,7 +243,7 @@ def test_column_mapping_refused_even_on_legacy_protocol(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # Deletion vectors: an INDEPENDENT serializer (not the library parser
 # run backwards) builds protocol-conformant roaring bitmaps and DV
-# files, then the interop scan must drop exactly the marked row indices.
+# files, then the engine's scan must drop exactly the marked row indices.
 # ---------------------------------------------------------------------------
 
 def _ser_roaring32(values) -> bytes:
@@ -345,9 +348,10 @@ def test_deletion_vector_file_scan(spark, tmp_path):
             {"commitInfo": {"operation": "DELETE", "timestamp": 1}},
         ],
     )
-    t = DeltaInteropTable(spark, str(root))
+    t = LakeTable(spark, str(root))
     got = {(r["id"], r["name"]) for r in t.to_df().collect()}
     assert got == {(1, "a"), (2, "b"), (11, "y")}
+    assert {(r["id"], r["name"]) for r in ref.rows(str(root))} == got
 
 
 def test_deletion_vector_inline(spark, tmp_path):
@@ -370,9 +374,10 @@ def test_deletion_vector_inline(spark, tmp_path):
             {"add": {"path": "f0.parquet", "partitionValues": {}, "size": 1, "modificationTime": 1, "dataChange": True, "deletionVector": dv}},
         ],
     )
-    t = DeltaInteropTable(spark, str(root))
+    t = LakeTable(spark, str(root))
     got = {r["id"] for r in t.to_df().collect()}
     assert got == {1, 3}
+    assert {r["id"] for r in ref.rows(str(root))} == got
 
 
 def test_roaring_parser_container_shapes():
@@ -444,14 +449,15 @@ def test_v2_checkpoint_sidecar_replay(spark, tmp_path):
             {"commitInfo": {"operation": "WRITE", "timestamp": 2}},
         ],
     )
-    t = DeltaInteropTable(spark, str(root))
+    t = LakeTable(spark, str(root))
     got = {r["id"] for r in t.to_df().collect()}
     assert got == {1, 2, 3}
+    assert {r["id"] for r in ref.rows(str(root))} == got
 
 
 def test_native_table_still_wins(spark, tmp_path):
     """for_path on the engine's own format returns a read-write
-    LakeTable, untouched by the interop path."""
+    LakeTable."""
     path = str(tmp_path / "native")
     LakeTable.create(spark, path, df=spark.range(3))
     t = LakeTable.for_path(spark, path)
@@ -514,16 +520,11 @@ def test_column_mapping_read_by_physical_name(spark, tmp_path):
             {"add": {"path": "f0.parquet", "partitionValues": {}, "size": 1, "modificationTime": 1, "dataChange": True}},
         ],
     )
-    it = DeltaInteropTable(spark, str(root))
-    df = it.to_df()
+    df = LakeTable.for_path(spark, str(root)).to_df()
     assert df.columns == ["id", "info"]
     got = {(r["id"], r["info"]["name"]) for r in df.collect()}
     assert got == {(1, "x"), (2, "y")}
-    # column-mapped tables open WRITABLE since mapped write-back
-    # landed: an append lands physical-named parquet + preserved
-    # mapping metadata (full DML coverage in test_delta_writeback)
-    t2 = LakeTable.for_path(spark, str(root))
-    assert isinstance(t2, LakeTable)
+    assert {(r["id"], r["info"]["name"]) for r in ref.rows(str(root))} == got
 
 
 def test_column_mapping_without_physical_names_refused(spark, tmp_path):
@@ -541,14 +542,14 @@ def test_column_mapping_without_physical_names_refused(spark, tmp_path):
         ],
     )
     with pytest.raises(NotImplementedError, match="physicalName"):
-        DeltaInteropTable(spark, str(root)).to_df()
+        LakeTable.for_path(spark, str(root)).to_df()
 
 
 def test_interop_cdf_over_column_mapped_table(spark, tmp_path):
-    """`DeltaInteropTable.read_changes` synthesizes append-only CDF for
-    external tables via the read-only interop handle:
+    """CDF over a column-mapped external table without cdc actions:
     each commit's adds become insert rows under LOGICAL column names,
-    and a rewrite commit is refused loudly."""
+    and a rewrite commit is refused loudly — on the engine's reader and
+    on the reference reader alike."""
     import pyarrow as pa
     import pyarrow.parquet as pq_
     from pyspark.sql.types import StructField as SF, StructType as ST
@@ -595,29 +596,32 @@ def test_interop_cdf_over_column_mapped_table(spark, tmp_path):
         1,
         [{"add": {"path": "f1.parquet", "partitionValues": {}, "size": 1, "modificationTime": 2, "dataChange": True}}],
     )
-    # exercise the interop handle's own read_changes directly (mapped
-    # tables open writable via for_path since mapped write-back landed,
-    # but sharing still needs this path for any future read-only shape)
-    it = DeltaInteropTable(spark, str(root))
+    t = LakeTable.for_path(spark, str(root))
     got = {
         (r["id"], r["_change_type"], r["_commit_version"])
-        for r in it.read_changes().collect()
+        for r in t.read_changes().collect()
     }
     assert got == {(1, "insert", 0), (2, "insert", 0), (3, "insert", 1)}
-    assert {r["id"] for r in it.read_changes(starting_version=1).collect()} == {3}
+    assert {
+        (r["id"], r["_change_type"], r["_commit_version"])
+        for r in ref.changes(str(root))
+    } == got
+    assert {r["id"] for r in t.read_changes(starting_version=1).collect()} == {3}
     _commit(
         root,
         2,
         [{"remove": {"path": "f0.parquet", "deletionTimestamp": 3, "dataChange": True}}],
     )
-    with pytest.raises(NotImplementedError):
-        it.read_changes().collect()
+    with pytest.raises(NotImplementedError, match="version 2"):
+        t.read_changes().collect()
+    with pytest.raises(NotImplementedError, match="version 2"):
+        ref.changes(str(root))
 
 
 def test_partitioned_delta_writeback_roundtrip(spark, tmp_path):
     """Partitioned Delta write-back: create(partition_by) lays data out
     hive-style, every DML lands partitionValues-stamped add actions,
-    and the INDEPENDENT interop replay (plus time travel) agrees."""
+    and the INDEPENDENT reference reader (plus time travel) agrees."""
     from pyspark.sql import Row
 
     path = str(tmp_path / "part_wb")
@@ -652,11 +656,8 @@ def test_partitioned_delta_writeback_roundtrip(spark, tmp_path):
     assert {
         (r["day"], r["id"], r["v"]) for r in t.to_df().collect()
     } == expect
-    # independent replay path sees the same table
-    it = DeltaInteropTable(spark, path)
-    assert {
-        (r["day"], r["id"], r["v"]) for r in it.to_df().collect()
-    } == expect
+    # the independent reference reader sees the same table
+    assert {(r["day"], r["id"], r["v"]) for r in ref.rows(path)} == expect
     # time travel to v0 recovers the original partitioned snapshot
     assert {(r["day"], r["id"]) for r in t.to_df(version=0).collect()} == {
         ("d1", 1),
@@ -706,6 +707,4 @@ def test_partitioned_dv_delete_and_vacuum(spark, tmp_path):
     assert sorted(x["id"] for x in t.to_df().collect()) == [
         0, 1, 2, 4, 5, 6, 7, 8,
     ]
-    assert sorted(
-        x["id"] for x in DeltaInteropTable(spark, path).to_df().collect()
-    ) == [0, 1, 2, 4, 5, 6, 7, 8]
+    assert sorted(x["id"] for x in ref.rows(path)) == [0, 1, 2, 4, 5, 6, 7, 8]

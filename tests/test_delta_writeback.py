@@ -1,11 +1,12 @@
 """Delta Lake write-back: the engine's writers (append / append_txn /
 MERGE / DELETE / UPDATE / OPTIMIZE / RESTORE) commit real ``_delta_log``
 JSON actions + periodic parquet checkpoints. Every assertion re-reads
-the table through the INDEPENDENT interop replay path
-(``DeltaInteropTable``), which folds raw protocol actions and never
-consults the writer's state — a full protocol round-trip per operation.
-(duckdb's delta extension would be a third reader, but it cannot be
-installed in this offline environment.)
+the table through the INDEPENDENT reference reader
+(``delta_reference``), which folds raw protocol actions without the
+engine's snapshot cache and reads data files with pyarrow — a full
+protocol round-trip per operation that shares no scan code with the
+writer. (duckdb's delta extension would be a third reader, but it
+cannot be installed in this offline environment.)
 """
 
 from __future__ import annotations
@@ -13,13 +14,11 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+import delta_reference as ref
 import pytest
 from pyspark.sql import functions as F
 
-from databricks_delta_lake_project_spark.tables import (
-    DeltaInteropTable,
-    LakeTable,
-)
+from databricks_delta_lake_project_spark.tables import LakeTable
 
 
 def _mk(spark, tmp_path, name="dl", props=None):
@@ -32,9 +31,8 @@ def _mk(spark, tmp_path, name="dl", props=None):
     return t, path
 
 
-def _interop_rows(spark, path, version=None):
-    df = DeltaInteropTable(spark, path).to_df(version=version)
-    return {tuple(r) for r in df.select("id", "name", "amount").collect()}
+def _ref_rows(path, version=None):
+    return {(r["id"], r["name"], r["amount"]) for r in ref.rows(path, version)}
 
 
 def test_create_emits_protocol_and_metadata(spark, tmp_path):
@@ -54,7 +52,7 @@ def test_create_emits_protocol_and_metadata(spark, tmp_path):
     assert sum(s["numRecords"] for s in stats) == 3
     assert min(s["minValues"]["id"] for s in stats) == 1
     assert max(s["maxValues"]["id"] for s in stats) == 3
-    assert _interop_rows(spark, path) == {
+    assert _ref_rows(path) == {
         (1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0),
     }
 
@@ -62,10 +60,10 @@ def test_create_emits_protocol_and_metadata(spark, tmp_path):
 def test_append_and_time_travel_via_interop(spark, tmp_path):
     t, path = _mk(spark, tmp_path)
     t.append(spark.createDataFrame([(4, "d", 40.0)], t.schema))
-    assert _interop_rows(spark, path) == {
+    assert _ref_rows(path) == {
         (1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, "d", 40.0),
     }
-    assert _interop_rows(spark, path, version=0) == {
+    assert _ref_rows(path, version=0) == {
         (1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0),
     }
 
@@ -82,12 +80,12 @@ def test_merge_roundtrip(spark, tmp_path):
         .execute()
     )
     assert m["numTargetRowsUpdated"] == 1 and m["numTargetRowsInserted"] == 1
-    assert _interop_rows(spark, path) == {
+    assert _ref_rows(path) == {
         (1, "a", 10.0), (2, "B!", 99.0), (3, "c", 30.0), (9, "new", 1.0),
     }
     # the MERGE commit carries remove actions for the rewritten files
     log = Path(path) / "_delta_log"
-    v = DeltaInteropTable(spark, path).version()
+    v = ref.version(path)
     actions = [
         json.loads(l)
         for l in (log / f"{v:020d}.json").read_text().splitlines()
@@ -102,7 +100,7 @@ def test_delete_update_roundtrip(spark, tmp_path):
     t, path = _mk(spark, tmp_path)
     t.delete("id = 1")
     t.update("id = 2", {"amount": "amount + 5"})
-    assert _interop_rows(spark, path) == {(2, "b", 25.0), (3, "c", 30.0)}
+    assert _ref_rows(path) == {(2, "b", 25.0), (3, "c", 30.0)}
 
 
 def test_txn_append_idempotent_on_delta(spark, tmp_path):
@@ -111,7 +109,7 @@ def test_txn_append_idempotent_on_delta(spark, tmp_path):
     assert t.append_txn(batch, "app1", 0) >= 0
     assert t.append_txn(batch, "app1", 0) == -1  # replay skipped
     assert t.txn_version("app1") == 0
-    rows = _interop_rows(spark, path)
+    rows = _ref_rows(path)
     assert (7, "g", 70.0) in rows and len(rows) == 4
     # the txn is a real protocol action, visible to other Delta readers
     log = Path(path) / "_delta_log"
@@ -131,9 +129,10 @@ def test_schema_evolution_writes_new_metadata(spark, tmp_path):
         [(5, "e", 50.0, "extra")], "id long, name string, amount double, tag string"
     )
     t.append(evolved, merge_schema=True)
-    it = DeltaInteropTable(spark, path)
-    assert [f.name for f in it.schema.fields] == ["id", "name", "amount", "tag"]
-    got = {tuple(r) for r in it.to_df().filter(F.col("id") == 5).collect()}
+    assert [f.name for f in ref.schema(path).fields] == [
+        "id", "name", "amount", "tag",
+    ]
+    got = {tuple(r.values()) for r in ref.rows(path) if r["id"] == 5}
     assert got == {(5, "e", 50.0, "extra")}
 
 
@@ -146,11 +145,12 @@ def test_checkpoint_written_and_replayable(spark, tmp_path):
     assert cps, "no checkpoint parquet written"
     last = json.loads((log / "_last_checkpoint").read_text())
     assert last["version"] % 10 == 0
-    # interop replay (which honors _last_checkpoint) equals full content
-    rows = _interop_rows(spark, path)
+    # the reference replay (which honors _last_checkpoint) equals full
+    # content
+    rows = _ref_rows(path)
     assert {r[0] for r in rows} == {1, 2, 3} | set(range(10, 21))
     # pre-checkpoint time travel still works from the JSON commits
-    assert _interop_rows(spark, path, version=0) == {
+    assert _ref_rows(path, version=0) == {
         (1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0),
     }
 
@@ -161,7 +161,7 @@ def test_optimize_adds_carry_datachange_false(spark, tmp_path):
         t.append(spark.createDataFrame([(i, f"r{i}", float(i))], t.schema))
     res = t.optimize()
     assert res["numFilesAdded"] >= 1
-    v = DeltaInteropTable(spark, path).version()
+    v = ref.version(path)
     actions = [
         json.loads(l)
         for l in (Path(path) / "_delta_log" / f"{v:020d}.json")
@@ -171,7 +171,7 @@ def test_optimize_adds_carry_datachange_false(spark, tmp_path):
     ]
     adds = [a["add"] for a in actions if "add" in a]
     assert adds and all(a["dataChange"] is False for a in adds)
-    assert len(_interop_rows(spark, path)) == 7
+    assert len(_ref_rows(path)) == 7
 
 
 def test_restore_and_history_on_delta(spark, tmp_path):
@@ -179,7 +179,7 @@ def test_restore_and_history_on_delta(spark, tmp_path):
     t.append(spark.createDataFrame([(4, "d", 40.0)], t.schema))
     t.delete("id <= 2")
     t.restore(1)
-    assert _interop_rows(spark, path) == {
+    assert _ref_rows(path) == {
         (1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, "d", 40.0),
     }
     ops = [r["operation"] for r in t.history().orderBy("version").collect()]
@@ -191,14 +191,14 @@ def test_for_path_opens_delta_writable(spark, tmp_path):
     t = LakeTable.for_path(spark, path)
     assert isinstance(t, LakeTable)
     t.append(spark.createDataFrame([(8, "h", 80.0)], t.schema))
-    assert (8, "h", 80.0) in _interop_rows(spark, path)
+    assert (8, "h", 80.0) in _ref_rows(path)
 
 
 def test_for_path_partitioned_external_opens_writable(spark, tmp_path):
     """An externally-partitioned Delta table opens WRITABLE since
     partitioned write-back landed: an engine append lands hive-style
     files with partitionValues-stamped add actions that the independent
-    interop replay reads back."""
+    reference reader reads back."""
     root = tmp_path / "ext_part"
     sub = root / "part=0"
     sub.mkdir(parents=True)
@@ -233,8 +233,7 @@ def test_for_path_partitioned_external_opens_writable(spark, tmp_path):
         e["partitionValues"] == {"part": "1"} and "part=1" in e["path"]
         for e in new
     )
-    it = DeltaInteropTable(spark, str(root))
-    assert {(r["id"], r["part"]) for r in it.to_df().collect()} == {
+    assert {(r["id"], r["part"]) for r in ref.rows(str(root))} == {
         (1, 0),
         (2, 1),
     }
@@ -252,8 +251,8 @@ def test_cdf_works_on_delta_format(spark, tmp_path):
 def test_delete_via_deletion_vectors(spark, tmp_path):
     """DV delete: no data file is rewritten — the touched file is
     re-added with a deletion-vector descriptor, the protocol upgrades
-    to (3,7)+deletionVectors, and BOTH read paths (engine and
-    independent interop replay) drop exactly the marked rows."""
+    to (3,7)+deletionVectors, and BOTH readers (engine and independent
+    reference) drop exactly the marked rows."""
     df = spark.createDataFrame(
         [(i, f"r{i}", float(i)) for i in range(10)],
         "id long, name string, amount double",
@@ -284,7 +283,7 @@ def test_delete_via_deletion_vectors(spark, tmp_path):
     assert add["deletionVector"]["cardinality"] == 2
     # both readers agree
     assert {r["id"] for r in t.to_df().collect()} == set(range(10)) - {2, 5}
-    assert {r[0] for r in DeltaInteropTable(spark, path).to_df().select("id").collect()} == set(range(10)) - {2, 5}
+    assert {r["id"] for r in ref.rows(path)} == set(range(10)) - {2, 5}
     # second DV delete unions positions into a fresh bitmap
     m2 = t.delete("id = 7")
     assert m2["strategy"] == "dv"
@@ -293,11 +292,8 @@ def test_delete_via_deletion_vectors(spark, tmp_path):
     t.update("id = 0", {"amount": "999.0"})
     rows = {(r["id"], r["amount"]) for r in t.to_df().collect()}
     assert (0, 999.0) in rows and len(rows) == 7
-    # time travel through the interop replay still sees the DV'd state
-    assert {
-        r[0]
-        for r in DeltaInteropTable(spark, path).to_df(version=1).select("id").collect()
-    } == set(range(10)) - {2, 5}
+    # time travel through the reference reader still sees the DV'd state
+    assert {r["id"] for r in ref.rows(path, 1)} == set(range(10)) - {2, 5}
 
 
 def test_dv_delete_kills_whole_file(spark, tmp_path):
@@ -315,7 +311,7 @@ def test_dv_delete_kills_whole_file(spark, tmp_path):
     assert m["strategy"] == "dv"
     assert m["numRemovedFiles"] == 1 and m["numDeletionVectorsAdded"] == 0
     assert t.to_df().count() == 0
-    assert DeltaInteropTable(spark, path).to_df().count() == 0
+    assert ref.rows(path) == []
 
 
 def test_dv_falls_back_to_rewrite_when_large(spark, tmp_path):
@@ -348,7 +344,7 @@ def test_commit_race_put_if_absent(spark, tmp_path):
     assert versions == [0, 1, 2]
     ops = [r["operation"] for r in t.history().orderBy("version").collect()]
     assert ops == ["CREATE TABLE AS SELECT", "FOREIGN", "WRITE"]
-    assert (4, "d", 40.0) in _interop_rows(spark, path)
+    assert (4, "d", 40.0) in _ref_rows(path)
 
 
 def test_dv_read_plan_is_broadcast_antijoin(spark, tmp_path):
@@ -391,12 +387,8 @@ def test_update_via_deletion_vectors(spark, tmp_path):
     assert len(files_after) > len(files_before)
     got = {(r["id"], r["amount"]) for r in t.to_df().collect()}
     assert (1, 10.0) in got and (4, 40.0) in got and len(got) == 10
-    # the independent replay reader agrees
-    io = {
-        (r["id"], r["amount"])
-        for r in DeltaInteropTable(spark, path).to_df().select("id", "amount").collect()
-    }
-    assert io == got
+    # the independent reference reader agrees
+    assert {(r["id"], r["amount"]) for r in ref.rows(path)} == got
 
 
 def test_vacuum_collects_orphaned_dv_bins(spark, tmp_path):
@@ -546,8 +538,8 @@ def _mk_mapped(spark, tmp_path, extra_props=None, name="cmap_wb"):
 def test_column_mapped_writeback_full_dml(spark, tmp_path):
     """Column-mapped tables open WRITABLE: every DML writes parquet
     under PHYSICAL names with physical-keyed stats, the mapping
-    metadata survives every commit, and the independent interop replay
-    agrees; schema evolution (id assignment) is refused loudly."""
+    metadata survives every commit, and the independent reference
+    reader agrees; schema evolution (id assignment) is refused loudly."""
     from pyspark.sql import Row
 
     root = _mk_mapped(spark, tmp_path)
@@ -570,8 +562,7 @@ def test_column_mapped_writeback_full_dml(spark, tmp_path):
     )
     expect = [(2, "Y!"), (3, "Z!"), (4, "w"), (5, "v")]
     assert sorted((r["id"], r["name"]) for r in t.to_df().collect()) == expect
-    it = DeltaInteropTable(spark, str(root))
-    assert sorted((r["id"], r["name"]) for r in it.to_df().collect()) == expect
+    assert sorted((r["id"], r["name"]) for r in ref.rows(str(root))) == expect
     # protocol inspection: fresh adds carry PHYSICAL stats keys; no
     # commit re-emitted metaData (which would have dropped the mapping)
     log = Path(root) / "_delta_log"
@@ -611,10 +602,9 @@ def test_column_mapped_writeback_full_dml(spark, tmp_path):
         for r in t.to_df().filter(F.col("id") == 9).collect()
     }
     assert got == {(9, "yes")}
-    it2 = DeltaInteropTable(spark, str(root))
-    assert {
-        (r["id"], r["extra"]) for r in it2.to_df().collect()
-    } == {(2, None), (3, None), (4, None), (5, None), (9, "yes")}
+    assert {(r["id"], r["extra"]) for r in ref.rows(str(root))} == {
+        (2, None), (3, None), (4, None), (5, None), (9, "yes"),
+    }
     # non-additive change (rename) still refuses
     from pyspark.sql.types import LongType as L2, StructField as SF2, StructType as ST2
 
@@ -637,9 +627,7 @@ def test_column_mapped_dv_delete(spark, tmp_path):
     r = t.delete("id = 2")
     assert r["strategy"] == "dv" and r["numDeletedRows"] == 1
     assert sorted(x["id"] for x in t.to_df().collect()) == [1, 3]
-    assert sorted(
-        x["id"] for x in DeltaInteropTable(spark, str(root)).to_df().collect()
-    ) == [1, 3]
+    assert sorted(x["id"] for x in ref.rows(str(root))) == [1, 3]
     # the v3/v7 protocol upgrade must carry the columnMapping feature
     # the legacy version numbers implied, not just deletionVectors
     log = Path(root) / "_delta_log"
@@ -657,8 +645,9 @@ def test_column_mapped_dv_delete(spark, tmp_path):
 @pytest.mark.slow
 def test_writer_obligations_refused(spark, tmp_path):
     """The protocol obliges a writer to HONOR every declared writer
-    feature: generated/identity expressions and unknown v7
-    writerFeatures must refuse write-back (read-only interop handle);
+    feature: nested generated/identity expressions and unknown v7
+    writerFeatures refuse every write at commit while the table stays
+    readable (the full matrix is test_write_refusal_matrix);
     CHECK constraints/invariants open writable WITH enforcement, and
     delta.appendOnly opens writable but refuses data-changing removes
     at commit time."""
@@ -706,7 +695,7 @@ def test_writer_obligations_refused(spark, tmp_path):
     # highWaterMark tracking; full coverage in test_identity_columns)
     p2 = mk("ident", field_meta={"delta.identity.start": 1, "delta.identity.step": 1})
     assert isinstance(LakeTable.for_path(spark, p2), LakeTable)
-    # unknown v7 writer feature -> read-only
+    # unknown v7 writer feature -> readable, writes refused
     p3 = mk(
         "rowtrack",
         protocol={
@@ -715,7 +704,10 @@ def test_writer_obligations_refused(spark, tmp_path):
             "writerFeatures": ["rowTracking"],
         },
     )
-    assert isinstance(LakeTable.for_path(spark, p3), DeltaInteropTable)
+    t3 = LakeTable.for_path(spark, p3)
+    assert [r["id"] for r in t3.to_df().collect()] == [1]
+    with pytest.raises(NotImplementedError, match="rowTracking"):
+        t3.append(spark.createDataFrame([Row(id=2)]))
     # appendOnly: writable, appends land, removes refused at commit
     p4 = mk("ao", config={"delta.appendOnly": "true"})
     t = LakeTable.for_path(spark, p4)
@@ -750,9 +742,7 @@ def test_restore_across_dv_delete(spark, tmp_path):
     assert sorted(x["id"] for x in t.to_df().collect()) == [0, 1, 3, 4, 5]
     t.restore(0)
     assert sorted(x["id"] for x in t.to_df().collect()) == [0, 1, 2, 3, 4, 5]
-    assert sorted(
-        x["id"] for x in DeltaInteropTable(spark, path).to_df().collect()
-    ) == [0, 1, 2, 3, 4, 5]
+    assert sorted(x["id"] for x in ref.rows(path)) == [0, 1, 2, 3, 4, 5]
     # and restoring forward to the post-delete version re-applies the DV
     t.restore(1)
     assert sorted(x["id"] for x in t.to_df().collect()) == [0, 1, 3, 4, 5]
@@ -934,8 +924,7 @@ def test_partitioned_column_mapped_roundtrip(spark, tmp_path):
     (log / f"{0:020d}.json").write_text(
         "\n".join(json.dumps(a) for a in acts)
     )
-    it = DeltaInteropTable(spark, str(root))
-    assert sorted((r["id"], r["day"]) for r in it.to_df().collect()) == [
+    assert sorted((r["id"], r["day"]) for r in ref.rows(str(root))) == [
         (1, "d1"), (2, "d1"),
     ]
     t = LakeTable.for_path(spark, str(root))
@@ -955,11 +944,10 @@ def test_partitioned_column_mapped_roundtrip(spark, tmp_path):
         "col-ddd=" in a["path"] and list(a["partitionValues"]) == ["col-ddd"]
         for a in adds
     )
-    # independent replay agrees post-append
-    assert sorted(
-        (r["id"], r["day"])
-        for r in DeltaInteropTable(spark, str(root)).to_df().collect()
-    ) == [(1, "d1"), (2, "d1"), (3, "d2")]
+    # the independent reference reader agrees post-append
+    assert sorted((r["id"], r["day"]) for r in ref.rows(str(root))) == [
+        (1, "d1"), (2, "d1"), (3, "d2"),
+    ]
     # logical-name partition DELETE whole-drops the stats-less file
     # with the exact count (footer fallback)
     m = t.delete("day = 'd1'")
@@ -1015,10 +1003,7 @@ def test_merge_via_deletion_vectors(spark, tmp_path):
               (5, 5.0), (6, 6.0), (7, 77.0), (8, 8.0), (9, 9.0),
               (20, 20.0)]
     assert sorted((r["id"], r["v"]) for r in t.to_df().collect()) == expect
-    assert sorted(
-        (r["id"], r["v"])
-        for r in DeltaInteropTable(spark, path).to_df().collect()
-    ) == expect
+    assert sorted((r["id"], r["v"]) for r in ref.rows(path)) == expect
     cdf = t.read_changes(starting_version=1)
     got = sorted((r["id"], r["_change_type"]) for r in cdf.collect())
     assert got == [
@@ -1259,8 +1244,8 @@ def test_constraint_enforcement_edges(spark, tmp_path):
 def test_mapped_rename_drop_roundtrip(spark, tmp_path):
     """RENAME/DROP COLUMN on a column-mapped table are metadata-only:
     physicalNames never change, no data file is rewritten, the
-    independent interop replay agrees, and every earlier version still
-    time-travels under its then-current names."""
+    independent reference reader agrees, and every earlier version
+    still time-travels under its then-current names."""
     from pyspark.sql import Row
 
     root = _mk_mapped(spark, tmp_path, name="cmap_evolve")
@@ -1286,9 +1271,8 @@ def test_mapped_rename_drop_roundtrip(spark, tmp_path):
     got = sorted((r["id"], r["label"]) for r in t.to_df().collect())
     assert got == [(1, "x"), (2, "Y!"), (3, "z"), (4, "w")]
 
-    # independent replay reader sees the rename
-    it = DeltaInteropTable(spark, str(root))
-    assert sorted((r["id"], r["label"]) for r in it.to_df().collect()) == got
+    # the independent reference reader sees the rename
+    assert sorted((r["id"], r["label"]) for r in ref.rows(str(root))) == got
 
     # time travel to the pre-rename version: old logical name
     old = t.to_df(version=v0)
@@ -1305,8 +1289,7 @@ def test_mapped_rename_drop_roundtrip(spark, tmp_path):
     assert sorted(r["id"] for r in t.to_df().collect()) == [1, 2, 3, 4]
     assert t.to_df(version=v_pre_drop).columns == ["id", "label"]
     t.append(spark.createDataFrame([Row(id=5)]))
-    it2 = DeltaInteropTable(spark, str(root))
-    assert sorted(r["id"] for r in it2.to_df().collect()) == [1, 2, 3, 4, 5]
+    assert sorted(r["id"] for r in ref.rows(str(root))) == [1, 2, 3, 4, 5]
 
     # re-adding the same logical name gets a FRESH physicalName — old
     # col-bbb data must never resurrect
@@ -1405,7 +1388,7 @@ def test_merge_not_matched_by_source_builder(spark, tmp_path):
 def test_convert_parquet_to_delta_in_place(spark, tmp_path):
     """CONVERT TO DELTA: a plain hive-partitioned parquet directory
     becomes a Delta table with NO data rewrite — footer-stats adds,
-    typed partition columns, then full DML + interop round-trip."""
+    typed partition columns, then full DML + reference round-trip."""
     src = tmp_path / "raw"
     df = spark.range(300).selectExpr(
         "id AS k", "CONCAT('d', id % 3) AS day", "id * 2 AS v"
@@ -1427,12 +1410,10 @@ def test_convert_parquet_to_delta_in_place(spark, tmp_path):
     # partition pruning works off the synthesized stats
     m = t.delete("day = 'd2'")
     assert m["numWholeFilesRemoved"] >= 1 and m["numDeletedRows"] == 100
-    # independent replay reader agrees after DML
-    it = DeltaInteropTable(spark, str(src))
-    assert it.to_df().count() == 200
-    assert {r["day"] for r in it.to_df().select("day").distinct().collect()} == {
-        "d0", "d1",
-    }
+    # the independent reference reader agrees after DML
+    rows = ref.rows(str(src))
+    assert len(rows) == 200
+    assert {r["day"] for r in rows} == {"d0", "d1"}
     # appends land hive-style alongside the converted files
     t.append(
         spark.createDataFrame([(999, 4.0, "d9")], "k long, v double, day string")

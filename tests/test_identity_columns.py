@@ -140,8 +140,6 @@ def test_nested_identity_still_refused(spark, tmp_path):
     import json as _json
     from pathlib import Path
 
-    from databricks_delta_lake_project_spark.tables import DeltaInteropTable
-
     root = Path(tmp_path) / "nested_ident"
     root.mkdir()
     inner = StructType(
@@ -172,10 +170,12 @@ def test_nested_identity_still_refused(spark, tmp_path):
     (log / f"{0:020d}.json").write_text(
         "\n".join(_json.dumps(a) for a in acts)
     )
-    # nested identity -> read-only interop handle
-    assert isinstance(
-        LakeTable.for_path(spark, str(root)), DeltaInteropTable
-    )
+    # nested identity -> readable, every write refused at commit
+    t = LakeTable.for_path(spark, str(root))
+    assert t.to_df().count() == 0
+    with pytest.raises(NotImplementedError, match=r"s\.uid"):
+        t.append(spark.createDataFrame([Row(s=Row(uid=1))], schema))
+    assert t.version() == 0
 
 
 def test_identity_with_many_partitions_unique(spark, tmp_path):

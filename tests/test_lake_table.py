@@ -37,14 +37,14 @@ def test_tables_are_delta_only(spark, tmp_path):
     ``_delta_log``, an independent Delta reader sees the same rows, and
     ``is_table`` finds it, as it does an explicit ``format="delta"``
     table. Any other format is refused naming the contract."""
-    from databricks_delta_lake_project_spark.tables import DeltaInteropTable
+    import delta_reference as ref
 
     df = _users(spark, [(1, "alice", 10.0, 1), (2, "bob", 20.0, 1)])
     root = tmp_path / "default"
     t = LakeTable.create(spark, str(root), df=df)
     assert (root / "_delta_log").is_dir() and not (root / "_log").exists()
-    assert sorted(DeltaInteropTable(spark, str(root)).to_df().collect()) == sorted(
-        t.to_df().collect()
+    assert sorted(tuple(r.values()) for r in ref.rows(str(root))) == sorted(
+        tuple(r) for r in t.to_df().collect()
     )
     assert LakeTable.is_table(str(root))
 
@@ -118,6 +118,8 @@ def test_time_travel_and_restore(spark, tbl):
     assert tbl.to_df().count() == 3
     assert tbl.to_df(version=v0).count() == 3
     assert 1 in _as_dict(tbl.to_df(version=v0))
+    with pytest.raises(ValueError, match="version -1"):
+        tbl.to_df(version=-1)
     tbl.restore(v0)
     data = _as_dict(tbl.to_df())
     assert sorted(data) == [1, 2, 3]

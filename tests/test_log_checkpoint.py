@@ -153,8 +153,9 @@ def test_delta_checkpoint_preserves_dvs_and_partitioning(spark, tmp_path):
     from pathlib import Path
     from pyspark.sql import Row
 
+    import delta_reference as ref
+
     from databricks_delta_lake_project_spark.tables.delta_interop import (
-        DeltaInteropTable,
         _last_checkpoint,
         _replay,
     )
@@ -183,9 +184,7 @@ def test_delta_checkpoint_preserves_dvs_and_partitioning(spark, tmp_path):
     assert state.partition_columns == ["day"]
     dv_adds = [a for a in state.adds.values() if a.get("deletionVector")]
     assert dv_adds, "checkpoint dropped the deletionVector descriptor"
-    got = sorted(
-        x["id"] for x in DeltaInteropTable(spark, root).to_df().collect()
-    )
+    got = sorted(x["id"] for x in ref.rows(root))
     assert got == [0, 1, 3, 4, 5] + list(range(10, 19))
     # delete the pre-checkpoint JSON commits: the replay must now be
     # seeded PURELY from the checkpoint and still agree
@@ -194,10 +193,8 @@ def test_delta_checkpoint_preserves_dvs_and_partitioning(spark, tmp_path):
         p = log / f"{v:020d}.json"
         if p.exists():
             p.unlink()
-    got2 = sorted(
-        x["id"] for x in DeltaInteropTable(spark, root).to_df().collect()
-    )
-    assert got2 == got
+    assert sorted(x["id"] for x in ref.rows(root)) == got
+    assert sorted(x["id"] for x in t.to_df().collect()) == got
 
 
 @pytest.mark.slow

@@ -168,13 +168,13 @@ def test_reorg_is_invisible_to_cdf(spark, tmp_path):
     }
     assert got == expect
 
-    from databricks_delta_lake_project_spark.tables import DeltaInteropTable
+    import delta_reference as ref
 
-    interop = {
+    reference = {
         (r["id"], r["_change_type"], r["_commit_version"])
-        for r in DeltaInteropTable(spark, t.root).read_changes(1).collect()
+        for r in ref.changes(t.root, 1)
     }
-    assert interop == expect
+    assert reference == expect
 
     from databricks_delta_lake_project_spark.queries.sqlpack import (
         run_statement,
