@@ -8,6 +8,15 @@ scale to a real multi-executor cluster: AQE handles skew + partition
 coalescing at runtime, the broadcast threshold keeps dimension joins
 shuffle-free, and shuffle partitions default to the local core count
 (on a cluster you'd size this to 2-3x total cores or let AQE coalesce).
+
+Every engine scan hands Spark the leaf data files its table log names,
+never a directory. Spark's file index still lists those paths when a
+DataFrame is built, and above
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths (32 by
+default) it lists them with a Spark job of one task per path — a job
+meant for recursive directory discovery. The factory raises that
+threshold to Int max, so a scan stats its files on the driver and a
+table read, DML probe or change-feed read launches no listing job.
 """
 
 from __future__ import annotations
@@ -27,6 +36,12 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+# Driver-side listing of the leaf files a scan is given (see the module
+# docstring): the table log already names every file, so a distributed
+# listing job only adds one task per file to each scan it builds.
+LISTING_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+LISTING_THRESHOLD = str(2**31 - 1)
 
 
 def session_key(spark: SparkSession) -> str:
@@ -78,6 +93,7 @@ def get_spark(
         # Testdata `events.ts` is TIMESTAMP(NANOS) parquet; Spark reads it
         # as long and the scan layer converts to microsecond timestamps.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(LISTING_CONF, LISTING_THRESHOLD)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
@@ -104,6 +120,8 @@ def get_spark(
     # pre-existing session handed to us by the driver.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # a runtime SQL conf read whenever a scan's file index is built
+    spark.conf.set(LISTING_CONF, LISTING_THRESHOLD)
     # providerClass is a runtime SQL conf read at stream start, so it
     # applies even when getOrCreate() returned a pre-existing session.
     if os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb").lower() != "hdfs":

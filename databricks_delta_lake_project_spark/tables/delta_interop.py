@@ -28,6 +28,7 @@ Scale notes:
 from __future__ import annotations
 
 import json
+import os
 import threading
 import uuid
 from collections import OrderedDict
@@ -317,23 +318,17 @@ _URI_PATH_SAFE = "/!$&'()*+,;=:@~"
 def spark_file_key(root: str, rel: str) -> str:
     """The exact string ``regexp_replace(_metadata.file_path,
     '^file:/+', '/')`` yields for file ``rel`` under ``root``:
-    absolute (NOT symlink-resolved — Hadoop qualifies paths without
-    realpath) and percent-encoded like java.net.URI. Every DV
-    row-position join and touched-file probe must build its driver
-    side through this function — ``Path.resolve()`` diverges under
-    symlinked roots and raw paths diverge on any special character
-    (a hive dir for partition value "a b" renders as ``day=a%20b``)."""
+    absolute and lexically normalized (``..`` collapsed, as
+    java.net.URI normalizes) but NOT symlink-resolved — Hadoop
+    qualifies paths without realpath — and percent-encoded like
+    java.net.URI. Every DV row-position join and touched-file probe
+    must build its driver side through this function —
+    ``Path.resolve()`` diverges under symlinked roots and raw paths
+    diverge on any special character (a hive dir for partition value
+    "a b" renders as ``day=a%20b``)."""
     from urllib.parse import quote
 
-    return quote(str((Path(root) / rel).absolute()), safe=_URI_PATH_SAFE)
-
-
-def spark_rel_key(rel: str) -> str:
-    """``rel`` percent-encoded the way it appears inside
-    ``_metadata.file_path`` (suffix matching)."""
-    from urllib.parse import quote
-
-    return quote(rel, safe=_URI_PATH_SAFE)
+    return quote(os.path.abspath(Path(root) / rel), safe=_URI_PATH_SAFE)
 
 
 def strip_schema_metadata(schema_json: str) -> str:

@@ -3039,18 +3039,12 @@ class LakeTable:
             )
         if not files:
             return []
-        from .delta_interop import spark_rel_key
-
         df = self._read_files(files, with_row_index=True)
         hit_paths = {
             r[0]
             for r in df.filter(cond).select("__file").distinct().collect()
         }
-        return [
-            e
-            for e in files
-            if any(hp.endswith(spark_rel_key(e["path"])) for hp in hit_paths)
-        ]
+        return _hit_files(self.root, files, hit_paths)
 
 
 _CMP_RE = re.compile(
@@ -3229,6 +3223,26 @@ def _file_fully_matches(
         except TypeError:
             return False  # mixed types prove nothing
     return True
+
+
+def _hit_files(
+    root: str, files: list[dict[str, Any]], hits: set[str]
+) -> list[dict[str, Any]]:
+    """The entries of ``files`` whose scan key is in ``hits``, the
+    ``__file`` values of a probe that read exactly ``files``. A hit
+    naming no candidate means the driver key diverged from Spark's
+    rendering of the path; dropping it would silently skip rows the
+    statement matched, so it raises."""
+    from .delta_interop import spark_file_key
+
+    keyed = [(spark_file_key(root, e["path"]), e) for e in files]
+    stray = hits - {k for k, _ in keyed}
+    if stray:
+        raise RuntimeError(
+            f"touched-file probe returned {len(stray)} file(s) outside "
+            f"its candidate set under {root}, e.g. {min(stray)!r}"
+        )
+    return [e for k, e in keyed if k in hits]
 
 
 def _prune_by_stats(
@@ -3811,8 +3825,6 @@ class MergeBuilder:
                 files = _prune_by_stats(files, self._source_key_bounds())
             touched = []
         if files and not self._by_source:
-            from .delta_interop import spark_rel_key
-
             with_file = (
                 t._read_files(files, with_row_index=True)
                 .drop("__pos")
@@ -3825,9 +3837,7 @@ class MergeBuilder:
                 .distinct()
                 .collect()
             }
-            touched = [
-                e for e in files if any(h.endswith(spark_rel_key(e["path"])) for h in hit)
-            ]
+            touched = _hit_files(t.root, files, hit)
 
         tgt = (
             t._read_files(touched, with_row_index=dv_mode)

@@ -793,6 +793,93 @@ def test_dv_delete_under_symlinked_root_and_special_chars(spark, tmp_path):
     assert [x["id"] for x in t2.to_df().collect()] == [9]
 
 
+def _gone_after(t, dml):
+    """Run ``dml`` and return the snapshot entries it removed."""
+    before = {e["path"]: e for e in t._files()}
+    dml()
+    after = {e["path"] for e in t._files()}
+    return [e for p, e in before.items() if p not in after]
+
+
+def test_touched_files_match_by_exact_key(spark, tmp_path):
+    """Copy-on-write UPDATE and MERGE select the files their probe hit
+    by exact scan key (``spark_file_key``), so each rewrites exactly
+    the one file holding its match: under a symlinked root, inside a
+    partition whose value needs percent-encoding ("a b"), and on a
+    SHALLOW clone whose entries are borrowed absolute paths. Stats
+    cannot prune here (every file spans v 'a'..'z'), so the probe alone
+    decides which file is touched."""
+    import os
+
+    from pyspark.sql import Row
+
+    real = tmp_path / "realdir"
+    real.mkdir()
+    link = tmp_path / "linkdir"
+    os.symlink(real, link)
+
+    def rows(*rs):
+        return spark.createDataFrame(
+            [Row(day=d, k=k, v=v) for d, k, v in rs]
+        ).coalesce(1)
+
+    t = LakeTable.create(
+        spark,
+        str(link / "t"),
+        df=rows(("a b", 0, "a"), ("a b", 1, "z"), ("c+d", 2, "a"), ("c+d", 3, "z")),
+        format="delta",
+        partition_by=["day"],
+    )
+    t.append(
+        rows(
+            ("a b", 4, "a"), ("a b", 5, "hit"), ("a b", 6, "z"),
+            ("c+d", 7, "a"), ("c+d", 8, "hit2"), ("c+d", 9, "z"),
+        )
+    )
+    c = t.clone(str(link / "c"), shallow=True)
+    assert all(Path(e["path"]).is_absolute() for e in c._files())
+    for tbl in (t, c):
+        assert len(tbl._files()) == 4
+        gone = _gone_after(tbl, lambda: tbl.update("v = 'hit'", {"k": "k + 100"}))
+        assert [e["partitionValues"] for e in gone] == [{"day": "a b"}]
+        src = spark.createDataFrame([Row(v="hit2", k=800)])
+        gone = _gone_after(
+            tbl,
+            lambda: tbl.merge(src, "t.v = s.v")
+            .whenMatchedUpdate({"k": "s.k"})
+            .execute(),
+        )
+        assert [e["partitionValues"] for e in gone] == [{"day": "c+d"}]
+        assert sorted(r["k"] for r in tbl.to_df().collect()) == [
+            0, 1, 2, 3, 4, 6, 7, 9, 105, 800,
+        ]
+    assert all(Path(e["path"]).is_absolute() for e in gone)  # borrowed
+    assert sorted(x["k"] for x in ref.rows(str(link / "t"))) == [
+        0, 1, 2, 3, 4, 6, 7, 9, 105, 800,
+    ]
+
+
+def test_dml_under_a_root_with_dot_dot(spark, tmp_path):
+    """Spark normalizes ``..`` out of a scanned path; the driver-side
+    file key must too. Otherwise a DV DELETE's row positions match no
+    file and the delete reports rows that survive."""
+    from pyspark.sql import Row
+
+    (tmp_path / "x").mkdir()
+    root = str(tmp_path / "x" / ".." / "t")
+    t = LakeTable.create(
+        spark,
+        root,
+        df=spark.createDataFrame([Row(id=i) for i in range(6)]).coalesce(1),
+        format="delta",
+        properties={"delta.enableDeletionVectors": "true"},
+    )
+    r = t.delete("id = 3")
+    assert r["numDeletedRows"] == 1 and r["numDeletionVectorsAdded"] == 1
+    t.update("id = 4", {"id": "40"}, strategy="rewrite")
+    assert sorted(x["id"] for x in t.to_df().collect()) == [0, 1, 2, 5, 40]
+
+
 def test_unsatisfiable_predicate_never_whole_drops(spark, tmp_path):
     """Equality conjuncts INTERSECT prior bounds: 'a >= 5 AND a = 3'
     matches nothing and must delete nothing — the old overwrite

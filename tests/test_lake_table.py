@@ -295,6 +295,50 @@ def test_partition_delete_is_metadata_only_zero_jobs(spark, tmp_path):
     assert sorted(_as_dict(t.to_df())) == [1]
 
 
+def test_scans_of_many_files_launch_no_listing_job(spark, tmp_path):
+    """Every scan hands Spark the leaf files the log names. Above
+    ``parallelPartitionDiscovery.threshold`` paths (32 by default) Spark
+    would list them with a job of one task per path; the session keeps
+    that listing on the driver, so building a read of 40 files launches
+    no job, partitioned or not, latest or time-travelled, pruned or not.
+    A warm copy-on-write UPDATE whose predicate no stats prune probes
+    all 40 files without a listing job too."""
+    sc = spark.sparkContext._jsc.sc()
+    rows = [(i, f"n{i}", float(i), 1) for i in range(40)]
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try:
+        flat = LakeTable.create(
+            spark, str(tmp_path / "flat"), df=_users(spark, rows).coalesce(1)
+        )
+        part = LakeTable.create(
+            spark,
+            str(tmp_path / "part"),
+            df=_users(spark, rows),
+            partition_by=["updated"],
+        )
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    for t in (flat, part):
+        assert len(t._files()) == 40
+        for build in (
+            t.to_df,
+            lambda: t.to_df(version=0),
+            lambda: t.read_where("id >= 2"),
+        ):
+            jobs0 = sc.dagScheduler().nextJobId()
+            build()
+            assert sc.dagScheduler().nextJobId() - jobs0 == 0
+    flat.update("id % 40 = 6", {"balance": "balance + 1"})  # warm-up
+    jobs0 = sc.dagScheduler().nextJobId()
+    m = flat.update("id % 40 = 7", {"balance": "balance + 1"})
+    jobs = sc.dagScheduler().nextJobId() - jobs0
+    assert m["numRemovedFiles"] == 1
+    # measured 3 once listing moved to the driver; 4 before, the
+    # fourth a listing job with one task per probed file
+    assert jobs <= 3, jobs
+    assert _as_dict(flat.to_df())[7] == ("n7", 8.0, 1)
+
+
 def test_merge_into_empty_table_matched_only_commits_noop(spark, tmp_path):
     """Empty target + only MATCHED clauses: nothing to insert, nothing
     to join — the MERGE commits an empty version (history parity with
